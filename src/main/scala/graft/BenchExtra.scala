@@ -31,8 +31,15 @@ object BenchExtra {
   }
 
   def main(args: Array[String]): Unit = {
-    val reps = args.headOption.filter(_.forall(_.isDigit)).map(_.toInt).getOrElse(2)
-    val wanted = args.dropWhile(_.forall(_.isDigit))
+    // a leading integer is the rep count unless it names a query
+    val known = SparkEntry.queries.keySet
+    val repsArg = args.headOption.filterNot(known.contains).flatMap(_.toIntOption)
+    val reps = repsArg.getOrElse(2)
+    val wanted = if (repsArg.isDefined) args.tail else args
+    require(reps > 0, s"reps must be positive, got $reps")
+    val unknown = wanted.filterNot(known.contains)
+    require(unknown.isEmpty, s"unknown queries ${unknown.mkString(", ")}; " +
+      s"valid: ${known.toSeq.sorted.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()

@@ -13,8 +13,11 @@ import org.apache.spark.sql.functions._
   * (SURVEY.md §3 E1), run via `spark-submit --class graft.RollupMain`.
   *
   * Per run: read transcript turns → compressed per-series segments (the
-  * pivot) → tier rollup cascade 1m→1h→1d → per-partition lineage commits →
-  * retention pass → metrics. Resumable per write mode (Checkpoint).
+  * pivot, the only raw scan and the only row-scale exchange) → the 1m, 1h
+  * and 1d points of each conv-day folded together from its segments in one
+  * exchange-free pass → one points write partitioned by (tier, pday) → one
+  * lineage commit per table → retention pass → metrics. Resumable per write
+  * mode (Checkpoint).
   */
 object RollupJob {
 
@@ -52,21 +55,18 @@ object RollupJob {
     col("ts") >= bound
   }
 
+  /** The job's points: every tier folded from the pivot's segments in one
+    * exchange-free pass, plus the `pday` partition column.
+    */
+  private[graft] def foldPoints(segs: Dataset[Segment], tiers: Seq[Tier]): DataFrame =
+    Rollups.pointsFromSegments(segs, tiers).toDF().withColumn("pday", pdayCol)
+
   /** Run the full pipeline. `asOfSec` drives retention (None = max input
     * bucket, deterministic — never wall-clock).
     */
   def run(spark: SparkSession, cfg: RollupConfig,
       io: TableIO = ParquetTableIO, asOfSec: Option[Long] = None): RunReport = {
     import spark.implicits._
-    // CORRECTNESS PIN: Rollups.pointsStreamed relies on the cube's cached
-    // (conv_id, bucket) hash partitioning surviving into the points fold;
-    // with canChangeCachedPlanOutputPartitioning=true AQE may re-plan the
-    // cached cube's output partitioning and silently break the per-key
-    // co-partitioning precondition (one point per key-run, not per key).
-    // The job owns its session's planning semantics, so pin it here rather
-    // than trusting spark-defaults.
-    spark.conf.set(
-      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
     // CORRECTNESS PIN: pdays are UTC day strings by contract, but
     // date_format renders in the session time zone — and the wmode-'a'
     // high-water predicate compares ts against UTC day boundaries. In a
@@ -121,11 +121,15 @@ object RollupJob {
     } else turnsAll
 
     // committed (tier, pday) partitions — anti-joined against planned
-    // output (J3; broadcast: partition count is tiny relative to data)
+    // output (J3). Collected once: a control-plane table of tiers × days
+    // rows, so the joins broadcast a local relation and the per-tier
+    // skipped counts need no extra job.
     val resume = cfg.writeMode == "s" || cfg.writeMode == "a"
-    val committed: DataFrame =
-      if (resume) Checkpoint.committed(spark, io, cfg.outputRoot).cache()
-      else spark.emptyDataFrame
+    val committedRows: Seq[(String, String)] =
+      if (resume) Checkpoint.committed(spark, io, cfg.outputRoot)
+        .as[(String, String)].collect().toSeq
+      else Seq.empty
+    val committed = committedRows.toDF("tier", "pday")
 
     val fingerprint = s"${cfg.inputPath}@${cfg.runId}"
     val sorted = cfg.tiers.sortBy(_.bucketSec)
@@ -138,8 +142,8 @@ object RollupJob {
     // salted two-phase variant (SeriesPivot.segmentsSalted) is the explicit
     // skew escape hatch and produces identical segments (tested).
     val segTier = sorted.last
-    // the segments are the job's ONLY full read of the raw table: the rollup
-    // cube below decodes them (≈2% of raw bytes) instead of rescanning raw
+    // the segments are the job's ONLY full read of the raw table: the points
+    // fold below decodes them (≈2% of raw bytes) instead of rescanning raw
     val segsTyped = SeriesPivot.segmentsSorted(turns, segTier, cfg)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val segs = segsTyped.toDF().withColumn("pday", pdayCol)
@@ -164,9 +168,8 @@ object RollupJob {
     // in ONE serialized async chain — never two io.write in flight, so the
     // session-level dynamic-partition-overwrite conf can't race and replay
     // ordering (data partitions first, lineage append after) is preserved
-    // per table — while the MAIN thread materializes the next stage's cube
-    // into the cache. Every cube/fold compute overlaps the previous write's
-    // commit + listing tail instead of waiting behind it.
+    // per table — while the MAIN thread materializes the points into the
+    // cache, overlapping the segments write's commit + listing tail.
     timed("segments pivot (materialize)")(segsTyped.count())
     var writeChain: Future[Any] = Future {
       timed("segments write")(
@@ -192,83 +195,51 @@ object RollupJob {
         .as[(Long, Option[Long])].head()
     }
 
-    // ---- rollup cascade: finest cube decoded from the cached segments,
-    // coarser tiers from the finer cube — raw data is never rescanned.
-    // Each cube is materialized HERE, on the main thread (overlapping the
-    // in-flight write), so the forked write and the next tier never race
-    // to compute a cold cache twice.
-    var finerCube: DataFrame = null
-    val cubes = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val reportFs = sorted.map { tier =>
-      val cube =
-        if (finerCube == null) Rollups.cubeFromSegments(segsTyped, tier)
-        else Rollups.cascadeCube(finerCube, tier)
-      cube.persist()
-      timed(s"cube ${tier.name} materialize")(cube.count())
-      cubes += cube
-      finerCube = cube
-      // streamed fold: cube is (conv_id, bucket)-partitioned, so this is
-      // sort-within-partitions + one typed pass, zero exchanges
-      val points0 = Rollups.pointsStreamed(cube, tier.name)
-        .withColumn("pday", pdayCol)
-      val points = cfg.metricsInclude match {
-        case Some(ms) =>
-          val drop = Seq(
-            "turns" -> Seq("turns"), "byRole" -> Seq("byRole"),
-            "byTool" -> Seq("byTool"),
-            "textLen" -> Seq("textLenSum", "textLenMin", "textLenMax"))
-            .filterNot { case (m, _) => ms.contains(m) }.flatMap(_._2)
-          points0.drop(drop: _*)
-        case None => points0
-      }
-      val done =
-        if (resume) Some(committed.filter(col("tier") === tier.name).select("pday"))
-        else None
-      val toWrite = done match {
-        case Some(d) => points.join(broadcast(d), Seq("pday"), "left_anti")
-        case None => points
-      }
-      val skipped = done.map(_.count()).getOrElse(0L)
-      // lineage: points-per-pday == distinct (conv_id, bucket) per pday in
-      // this tier's cube (points() groups by exactly that key)
-      val planned = cube.select("conv_id", "bucket").distinct()
-        .withColumn("pday", pdayCol)
-        .groupBy("pday").agg(count(lit(1)).as("rows"))
-        .withColumn("tier", lit(tier.name))
-        .select("tier", "pday", "rows")
-      val lineageCounts = done match {
-        case Some(d) => planned.join(broadcast(d), Seq("pday"), "left_anti")
-        case None => planned
-      }
-      // single fused pass: fold → pinned repartition → parquet. The points
-      // are NOT cached — lineage counts come from the cached cube, so the
-      // 1m tier's millions of map-typed rows are materialized exactly once,
-      // inside the write job. Chained behind the previous write; a failed
-      // write propagates and skips every later one (serial semantics).
-      val f = writeChain.map { _ =>
-        timed(s"points ${tier.name} write")(
-          io.write(toWrite.repartition(writeParts, col("pday"), writeSalt),
-            pointsPath, Seq("tier", "pday"), "overwrite"))
-        val written = Checkpoint.commitCounts(spark, io, cfg.outputRoot,
-          cfg.runId, lineageCounts, fingerprint)
-        TierReport(tier.name, written, skipped)
-      }
-      writeChain = f
-      f
+    // ---- rollup: every tier's points in ONE exchange-free fold over the
+    // cached segments, cached once — the single points write, the lineage
+    // counts and dims all read it
+    val points = foldPoints(segsTyped, sorted).persist()
+    timed("points fold (materialize)")(points.count())
+    val toWrite =
+      if (resume) points.join(broadcast(committed), Seq("tier", "pday"), "left_anti")
+      else points
+    val written = cfg.metricsInclude match {
+      case Some(ms) =>
+        val drop = Seq(
+          "turns" -> Seq("turns"), "byRole" -> Seq("byRole"),
+          "byTool" -> Seq("byTool"),
+          "textLen" -> Seq("textLenSum", "textLenMin", "textLenMax"))
+          .filterNot { case (m, _) => ms.contains(m) }.flatMap(_._2)
+        toWrite.drop(drop: _*)
+      case None => toWrite
     }
+    // lineage: one point per (conv_id, bucket), so a partition's row count
+    // is its distinct (conv_id, bucket) count
+    val lineageCounts = written.groupBy("tier", "pday")
+      .agg(count(lit(1)).as("rows"))
+      .as[(String, String, Long)].collect().toSeq
+    // all tiers in one write partitioned by (tier, pday) and one lineage
+    // commit, chained behind the segments write; a failed write propagates
+    // and skips every later one (serial semantics)
+    val pointsF = writeChain.map { _ =>
+      timed("points write")(
+        io.write(written.repartition(writeParts, col("pday"), writeSalt),
+          pointsPath, Seq("tier", "pday"), "overwrite"))
+      Checkpoint.commitCounts(spark, io, cfg.outputRoot, cfg.runId,
+        lineageCounts.toDF("tier", "pday", "rows"), fingerprint)
+    }
+    writeChain = pointsF
 
     // ---- dimension table (O3, the `once`-file analog): conversation-level
-    // attributes written once per run, derived from the coarsest cube (no
-    // extra scan of raw data); broadcast-join side for downstream queries.
-    // The `once` analog requires one TABLE per run, not one file: at
-    // 10^8–10^9 conversations a coalesce(1) would funnel the whole table
-    // through a single task (and cap the upstream aggregate's output
-    // parallelism), so this is a pinned multi-task write like the
-    // points/segments writes. Submitted concurrently — the coarsest cube is
-    // cached and the retention pass below is independent of dims.
-    val dims = finerCube.groupBy("conv_id").agg(
-      sum("c").as("turns_total"),
-      sum("lenSum").as("text_len_total"),
+    // attributes written once per run, derived from the cached coarsest
+    // tier's points (no extra scan of raw data); broadcast-join side for
+    // downstream queries. The `once` analog requires one TABLE per run, not
+    // one file: at 10^8–10^9 conversations a coalesce(1) would funnel the
+    // whole table through a single task, so this is a pinned multi-task
+    // write like the points/segments writes.
+    val dims = points.filter(col("tier") === segTier.name).groupBy("conv_id").agg(
+      sum("turns").as("turns_total"),
+      sum("textLenSum").as("text_len_total"),
       min("bucket").as("first_bucket"),
       max("bucket").as("last_bucket"))
     val dimsF = writeChain.map { _ =>
@@ -279,7 +250,12 @@ object RollupJob {
 
     // ---- retention: after every points/segments write has landed (the
     // dims write may still be in flight — different table, no conf overlap)
-    val reports = reportFs.map(Await.result(_, scala.concurrent.duration.Duration.Inf))
+    Await.result(pointsF, scala.concurrent.duration.Duration.Inf)
+    val reports = sorted.map { t =>
+      TierReport(t.name,
+        written = lineageCounts.collect { case (t.name, _, n) => n }.sum,
+        skipped = committedRows.count(_._1 == t.name).toLong)
+    }
     val segsWritten = Await.result(segsWrittenF, scala.concurrent.duration.Duration.Inf)
     val (inputRows, maxTsSec) =
       Await.result(statsF, scala.concurrent.duration.Duration.Inf)
@@ -290,10 +266,7 @@ object RollupJob {
     Retention(spark, io, segmentsPath, Seq(segTier), asOf)
     Await.result(dimsF, scala.concurrent.duration.Duration.Inf)
     segsTyped.unpersist()
-    cubes.foreach(_.unpersist())
-    // tiny control-plane table, but a long-lived session running many
-    // resume jobs would still accumulate one pinned copy per run
-    if (resume) committed.unpersist()
+    points.unpersist()
     Checkpoint.recordMetrics(spark, io, cfg.outputRoot, cfg.runId, "run",
       Map("input_rows" -> inputRows.toDouble,
         "segments_written" -> segsWritten.toDouble) ++
@@ -330,8 +303,6 @@ object RollupMain {
       .appName("graft-rollup")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
-      // see the pin in RollupJob.run — required by the streamed points fold
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
       // shuffle-codec knob (see BenchScaling note); default lz4
       .config("spark.io.compression.codec",
         sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_CODEC", "lz4"))

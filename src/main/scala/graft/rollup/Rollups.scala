@@ -8,21 +8,24 @@ import org.apache.spark.sql.functions._
   * north_rule "continuous aggregates ... 1m/1h/1d retention tiers").
   *
   * Design for 100 TB:
-  *   - ONE scan of the raw table produces the finest-tier "cube" at
-  *     `(conv_id, bucket, role, tool)` grain — a single hash-aggregate
-  *     shuffle with map-side partial aggregation (Catalyst does the
-  *     partial/final split automatically).
-  *   - Coarser tiers are computed by RE-AGGREGATING the finer cube
-  *     (sums of sums, min of mins — the classic rollup cascade; analog of
-  *     PyReshaper writing each output once from already-read slabs,
-  *     `reshaper.py :: convert`), never by rescanning raw data. The 1h
-  *     cascade input is ~bucketSec ratio smaller than raw.
+  *   - The job path is [[pointsFromSegments]]: the pivot has already
+  *     scanned the raw table once and hash-partitioned it by
+  *     `(conv_id, day)`, so every 1m, 1h and 1d bucket of a conv-day sits
+  *     in one partition. One exchange-free pass over the cached segments
+  *     folds the points of every tier at once — the analog of PyReshaper
+  *     reading each slice once and writing each output once
+  *     (`reshaper.py :: convert`). No cube is built or cached.
+  *   - [[cube]] → [[cascadeCube]] → [[points]] is the declarative
+  *     reference cascade: the finest cube at `(conv_id, bucket, role,
+  *     tool)` grain from one scan, coarser tiers by RE-AGGREGATING the
+  *     finer cube (sums of sums, min of mins), never by rescanning raw
+  *     data. Tests and the benchmark check the job's points against it.
   *   - All stats are integral (Long/Int) so results are EXACTLY equal at
   *     any parallelism (SURVEY.md §7.4.1) — no float accumulation order
   *     issues.
   *   - Per-role/per-tool maps are materialized only at the end, per
-  *     `(conv_id, bucket)` point, by folding the tiny (≤ |roles|·|tools|)
-  *     entry array — no extra shuffle, no join.
+  *     `(conv_id, bucket)` point, from a tiny (≤ |roles|·|tools|) fold —
+  *     no extra shuffle, no join.
   */
 object Rollups {
 
@@ -55,11 +58,12 @@ object Rollups {
 
   /** Finest-grain cube decoded from pivoted segments instead of raw rows.
     * The segments are ~2% of the raw table's bytes (Gorilla/DoD + deflate),
-    * so when the pivot has already scanned the raw table once, building the
-    * cube from its output makes the whole job a SINGLE raw scan — the
-    * dominant cost at 100 TB. Results are exactly equal to [[cube]] (the
-    * codecs are lossless; `len` uses code-point counts to match Spark's
-    * `length()`), asserted in ResumeSpec.
+    * so a cube built from them needs no second raw scan. Results are exactly
+    * equal to [[cube]] (the codecs are lossless; `len` uses code-point
+    * counts to match Spark's `length()`). Not on the job path any more
+    * ([[pointsFromSegments]] replaced it there); kept with [[cascadeCube]]
+    * and [[pointsStreamed]] for the benchmark's traced per-layer run and
+    * the plan audit.
     */
   def cubeFromSegments(segs: Dataset[graft.Segment], tier: Tier): DataFrame = {
     val spark = segs.sparkSession
@@ -142,7 +146,7 @@ object Rollups {
       role: String, tool: String, c: Long, lenSum: Long, lenMin: Int, lenMax: Int)
 
   /** Streaming points fold — identical output to [[points]] (asserted in
-    * tests) with a cheaper physical shape for the job path: the cube is
+    * tests) with a cheaper physical shape than it: the cube is
     * ALREADY hash-partitioned by (conv_id, bucket) ([[cubeFromSegments]] /
     * [[cascadeCube]]), so a codegen'd Tungsten sortWithinPartitions plus
     * one tight typed pass replaces the ObjectHashAggregate(collect_list)
@@ -150,8 +154,7 @@ object Rollups {
     * zero exchanges. PRECONDITION: rows of one (conv_id, bucket) must be
     * co-partitioned — violating it silently emits one point per
     * per-partition key-run instead of one per key, so this is
-    * `private[graft]`: external callers get the unconditional [[points]];
-    * the job path guarantees clustering by construction.
+    * `private[graft]`: external callers get the unconditional [[points]].
     */
   private[graft] def pointsStreamed(cubeDf: DataFrame, tierName: String): DataFrame = {
     val spark = cubeDf.sparkSession
@@ -198,6 +201,105 @@ object Rollups {
         }
       }
       .toDF()
+  }
+
+  /** Mutable stats of one (tier, bucket) point in [[pointsFromSegments]]. */
+  private final class PointAcc {
+    var turns = 0L
+    var lenSum = 0L
+    var lenMin = Int.MaxValue
+    var lenMax = Int.MinValue
+    val byRole = scala.collection.mutable.TreeMap.empty[String, Long]
+    val byTool = scala.collection.mutable.TreeMap.empty[String, Long]
+
+    def add(role: String, tool: String, len: Int): Unit = {
+      turns += 1; lenSum += len
+      if (len < lenMin) lenMin = len
+      if (len > lenMax) lenMax = len
+      // null role/tool still counts in `turns`; only absent from the maps
+      if (role != null) byRole.update(role, byRole.getOrElse(role, 0L) + 1L)
+      if (tool != null) byTool.update(tool, byTool.getOrElse(tool, 0L) + 1L)
+    }
+  }
+
+  /** Every tier's points in ONE exchange-free pass over the sort-based
+    * pivot's output ([[graft.pivot.SeriesPivot.segmentsSorted]] at the
+    * coarsest tier of `tiers`) — the job path. Each segment's ts, role and
+    * tool streams and text code-point counts are decoded once, and the
+    * turns are folded into the points of every tier at the same time.
+    * Equal to [[points]] over [[cube]] per tier (asserted in tests), with
+    * the codec's contract that a null text is stored as "" (length 0).
+    *
+    * PRECONDITION: all segments of one (conv_id, pivot bucket) are
+    * consecutive inside one partition. The pivot emits them so (one hash
+    * partition, sorted by that key), and no planner rule reorders rows
+    * inside a partition, so this holds by construction for its output,
+    * cached or not. Every tier must nest in the pivot tier so that no
+    * bucket straddles two pivot buckets (checked).
+    */
+  private[graft] def pointsFromSegments(segs: Dataset[graft.Segment],
+      tiers: Seq[Tier]): Dataset[graft.RollupPoint] = {
+    val spark = segs.sparkSession
+    import spark.implicits._
+    val sorted = tiers.sortBy(_.bucketSec)
+    val pivot = sorted.last
+    require(sorted.forall(t => pivot.bucketSec % t.bucketSec == 0),
+      s"every tier must nest in the pivot tier ${pivot.name}: " +
+        sorted.map(t => s"${t.name}=${t.bucketSec}s").mkString(", "))
+    val widths = sorted.map(_.bucketSec).toArray
+    val names = sorted.map(_.name).toArray
+    segs.mapPartitions { it =>
+      val segIt = it.buffered
+      val accs = Array.fill(widths.length)(scala.collection.mutable.LongMap.empty[PointAcc])
+
+      /** Fold the segments of the next (conv_id, pivot bucket) into `accs`
+        * and return its points, finest tier first, buckets ascending.
+        */
+      def foldNext(): Iterator[graft.RollupPoint] = {
+        val convId = segIt.head.conv_id
+        val pivotBucket = segIt.head.bucket
+        while (segIt.hasNext && segIt.head.conv_id == convId &&
+            segIt.head.bucket == pivotBucket) {
+          val s = segIt.next()
+          require(s.tier == pivot.name,
+            s"segment of tier ${s.tier}, expected the pivot tier ${pivot.name}")
+          val ts = graft.codec.Gorilla.decodeTimestamps(s.tsBlob)
+          val role = graft.codec.Gorilla.decodeStrings(s.roleBlob)
+          val tool = graft.codec.Gorilla.decodeStrings(s.toolBlob)
+          val lens = graft.codec.Gorilla.decodeTextPointCounts(s.textBlob)
+          var i = 0
+          while (i < s.n) {
+            val sec = Math.floorDiv(ts(i), 1000000L)
+            var k = 0
+            while (k < widths.length) {
+              val bucket = Math.floorDiv(sec, widths(k)) * widths(k)
+              accs(k).getOrElseUpdate(bucket, new PointAcc).add(role(i), tool(i), lens(i))
+              k += 1
+            }
+            i += 1
+          }
+        }
+        val out = widths.indices.flatMap { k =>
+          accs(k).toArray.sortBy(_._1).map { case (bucket, a) =>
+            graft.RollupPoint(convId, names(k), bucket, a.turns,
+              a.byRole.toMap, a.byTool.toMap, a.lenSum, a.lenMin, a.lenMax,
+              filled = false)
+          }
+        }
+        accs.foreach(_.clear())
+        out.iterator
+      }
+
+      new Iterator[graft.RollupPoint] {
+        private var cur: Iterator[graft.RollupPoint] = Iterator.empty
+        override def hasNext: Boolean = {
+          while (!cur.hasNext && segIt.hasNext) cur = foldNext()
+          cur.hasNext
+        }
+        override def next(): graft.RollupPoint =
+          if (hasNext) cur.next() else Iterator.empty.next()
+      }
+    }
   }
 
   /** Fold an array<struct{role,tool,c}> into map<key, sum(c)> with SQL

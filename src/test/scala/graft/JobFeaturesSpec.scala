@@ -31,6 +31,27 @@ class JobFeaturesSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.session.timeZone", "UTC")
   }
 
+  test("job points are the same whether AQE may re-plan cached output partitioning") {
+    // the fold depends only on the pivot's in-partition order, which no
+    // planner rule reorders, so the job needs no pin on this conf
+    val key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    val before = spark.conf.getOption(key)
+    def pointsWith(v: String) = {
+      spark.conf.set(key, v)
+      val out = s"$tmp/cached-partitioning-$v"
+      RollupJob.run(spark, RollupConfig(inputPath, out, runId = s"cp-$v"))
+      ParquetTableIO.read(spark, s"$out/points").selectExpr("tier", "pday",
+        "conv_id", "bucket", "turns", "array_sort(map_entries(byRole)) AS br",
+        "array_sort(map_entries(byTool)) AS bt", "textLenSum", "textLenMin",
+        "textLenMax", "filled")
+    }
+    try assertSameRows(pointsWith("true"), pointsWith("false"), "conf true vs false")
+    finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("connector seam: the whole job runs on ORC and matches parquet output") {
     import graft.io.OrcTableIO
     val pOut = s"$tmp/io-parquet"

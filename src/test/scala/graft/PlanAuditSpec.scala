@@ -127,6 +127,25 @@ class PlanAuditSpec extends SparkSpec {
     segs.unpersist()
   }
 
+  test("job fold of all tiers from segments adds no exchange before the write repartition") {
+    val segs = pivot.SeriesPivot.segmentsSorted(
+      gen.Synth.tiny(spark), Tier.Day, RollupConfig("", ""))
+      .persist()
+    segs.count()
+    val toWrite = RollupJob.foldPoints(segs, Tier.cascade).repartition(4, $"pday")
+    toWrite.collect() // materialize through AQE
+    val executed = toWrite.queryExecution.executedPlan.toString
+    assert(executed.contains("InMemoryRelation"), s"fold does not read the cached segments:\n$executed")
+    // cut the plan at the cached segments boundary, as above
+    val live = executed.linesIterator.takeWhile(!_.contains("InMemoryRelation")).mkString("\n")
+    val exchanges = "Exchange".r.findAllIn(live).size
+    assert(exchanges == 1 && live.contains("REPARTITION_BY_NUM"),
+      s"expected only the write repartition segments→points, got $exchanges:\n$live")
+    assert(!live.contains("ObjectHashAggregate"),
+      s"the fold must not plan an object hash aggregate:\n$live")
+    segs.unpersist()
+  }
+
   test("LSH candidate joins are equi-joins — no cartesian product anywhere") {
     // the one sanctioned nested-loop is the 1-row broadcast query vector in
     // ann_*; bucket/band candidate generation must always be an equi-join

@@ -42,19 +42,26 @@ class ResumeSpec extends SparkSpec {
     assertSameRows(SeriesPivot.decode(segs).toDF(),
       spark.read.parquet(inputPath), "job segments roundtrip")
 
-    // the segment-derived cube path must equal the direct raw-scan cube
+    // the job's one-pass fold over the segments must equal the reference
+    // cascade over the raw turns, tier by tier
     import graft.rollup.Rollups
-    import org.apache.spark.sql.functions.{array_sort, map_entries, date_format, timestamp_seconds}
-    def cmp(df: org.apache.spark.sql.DataFrame) = df
+    def cmp(df: DataFrame) = df
       .withColumn("byRole", array_sort(map_entries(col("byRole"))))
       .withColumn("byTool", array_sort(map_entries(col("byTool"))))
-      .select("conv_id", "bucket", "turns", "byRole", "byTool",
+      .select("conv_id", "tier", "bucket", "turns", "byRole", "byTool",
         "textLenSum", "textLenMin", "textLenMax", "filled")
-    val direct = Rollups.points(
-      Rollups.cube(spark.read.parquet(inputPath).as[Turn], Tier.Minute), "1m")
+    val reference = Rollups.allTiers(spark.read.parquet(inputPath).as[Turn], Tier.cascade)
     val jobPts = ParquetTableIO.read(spark, s"$out/points")
-      .filter(col("tier") === "1m")
-    assertSameRows(cmp(jobPts), cmp(direct), "segment-derived cube == raw cube")
+    Tier.cascade.foreach { t =>
+      assertSameRows(cmp(jobPts.filter(col("tier") === t.name)), cmp(reference(t.name)),
+        s"${t.name}: job points == reference cascade")
+    }
+    // the single lineage commit records each (tier, pday)'s point count
+    val lineage = ParquetTableIO.read(spark, s"$out/_lineage")
+      .filter(col("run_id") === "run-full" && !col("tier").startsWith("seg-"))
+      .select("tier", "pday", "rows")
+    val pointRows = jobPts.groupBy("tier", "pday").agg(count(lit(1)).as("rows"))
+    assertSameRows(lineage, pointRows, "lineage rows == points per (tier, pday)")
   }
 
   test("wmode 'w' fails when output exists") {

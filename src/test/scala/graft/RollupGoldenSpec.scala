@@ -78,6 +78,48 @@ class RollupGoldenSpec extends SparkSpec {
     assert(got == want)
   }
 
+  test("one-pass fold from segments equals the reference cascade at every tier") {
+    def at(sec: Long) = new java.sql.Timestamp(sec * 1000L)
+    val midnight = 1700006400L // 2023-11-15T00:00:00Z
+    // a conversation across midnight (two conv-days) with null role, tool
+    // and text and 4-byte UTF-8 (U+1F600, one code point, two UTF-16 chars)
+    val edge = Seq(
+      Turn("edge", 0, null, "no role", "search", at(midnight - 70)),
+      Turn("edge", 1, "user", null, null, at(midnight - 65)),
+      Turn("edge", 2, "assistant", "a\uD83D\uDE00b", null, at(midnight - 10)),
+      Turn("edge", 3, "user", "\uD83D\uDE00", null, at(midnight + 5)),
+      Turn("edge", 4, null, null, null, at(midnight + 3600)),
+      Turn("edge", 5, "tool", "x", "search", at(midnight + 3610)))
+    val all = turns.union(edge.toDS()).cache()
+    // small segments: one conv-day spans several segments
+    val segs = pivot.SeriesPivot.segmentsSorted(all, Tier.Day,
+      RollupConfig("", "", maxPointsPerSegment = 7)).cache()
+    assert(segs.filter($"seq_no" > 0).count() > 0, "no conv-day spans two segments")
+    val folded = Rollups.pointsFromSegments(segs, Tier.cascade).toDF().cache()
+    // the text codec stores a null text as "" (length 0): the reference
+    // sees the text column as the segments carry it
+    val asStored = all.map(t => if (t.text == null) t.copy(text = "") else t)
+    Tier.cascade.foreach { tier =>
+      assert(asComparable(folded.filter($"tier" === tier.name)) ==
+        asComparable(Rollups.points(Rollups.cube(asStored, tier), tier.name)),
+        s"tier ${tier.name}")
+    }
+    val edgeDay = folded.filter($"conv_id" === "edge" && $"tier" === "1d")
+      .as[RollupPoint].collect().sortBy(_.bucket).toSeq
+    assert(edgeDay.map(p => (p.bucket, p.turns, p.textLenSum, p.textLenMin)) ==
+      Seq((midnight - 86400, 3L, 10L, 0), (midnight, 3L, 2L, 0)))
+    assert(edgeDay.head.byRole == Map("assistant" -> 1L, "user" -> 1L) &&
+      edgeDay.head.byTool == Map("search" -> 1L))
+    Seq(folded, segs, all).foreach(_.unpersist())
+  }
+
+  test("one-pass fold rejects tiers that do not nest in the pivot tier") {
+    val segs = pivot.SeriesPivot.segmentsSorted(turns, Tier.Day, RollupConfig("", ""))
+    intercept[IllegalArgumentException] {
+      Rollups.pointsFromSegments(segs, Seq(Tier("7m", 420L, -1L), Tier.Day))
+    }
+  }
+
   test("as-of join: latest at-or-before snapshot per key, nulls before first") {
     import org.apache.spark.sql.functions._
     def t(sec: Long) = new java.sql.Timestamp(sec * 1000)
