@@ -137,10 +137,8 @@ object RollupJob {
     import scala.concurrent.ExecutionContext.Implicits.global
 
     // ---- segments (the pivot) at the coarsest tier: long segments amortize
-    // per-segment encode cost; memory stays bounded via maxPointsPerSegment.
-    // The sort-based streaming pivot is the default physical strategy; the
-    // salted two-phase variant (SeriesPivot.segmentsSalted) is the explicit
-    // skew escape hatch and produces identical segments (tested).
+    // per-segment encode cost; memory stays bounded via maxPointsPerSegment,
+    // which also splits a hot conversation's bucket into several segments.
     val segTier = sorted.last
     // the segments are the job's ONLY full read of the raw table: the points
     // fold below decodes them (≈2% of raw bytes) instead of rescanning raw

@@ -43,7 +43,6 @@ final class BitWriter(initialCapacity: Int = 64) {
   }
 
   def toBytes: Array[Byte] = java.util.Arrays.copyOf(buf, ((bitPos + 7) >>> 3).toInt)
-  def lengthBits: Long = bitPos
 }
 
 final class BitReader(bytes: Array[Byte]) {

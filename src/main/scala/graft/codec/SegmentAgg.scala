@@ -1,79 +1,11 @@
 package graft.codec
 
-import graft.Turn
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.{Encoder, Encoders}
 
-/** Encoded blobs of one transcript segment (before attaching key columns). */
-case class SegBlobs(
-    seq_no: Int,
-    n: Int,
-    tsBlob: Array[Byte],
-    idxBlob: Array[Byte],
-    roleBlob: Array[Byte],
-    toolBlob: Array[Byte],
-    textBlob: Array[Byte])
-
-/** Order-tolerant aggregation buffer: parallel column vectors of the turns
-  * seen so far, in ARBITRARY arrival order. `finish` sorts by turn_idx and
-  * encodes — so the result is identical at any parallelism / input order
-  * (SURVEY.md §7.4.1,3: merge step restores turn_idx order).
+/** Lossless `java.sql.Timestamp` ↔ epoch-µs conversions, the timestamp
+  * representation inside every segment's `tsBlob`.
   */
-case class SegBuf(
-    idx: Vector[Int],
-    ts: Vector[Long],
-    role: Vector[String],
-    tool: Vector[String],
-    text: Vector[String])
-
-object SegBuf { val empty: SegBuf = SegBuf(Vector.empty, Vector.empty, Vector.empty, Vector.empty, Vector.empty) }
-
-/** The engine's one custom aggregate (SURVEY.md §2.9 C1, §2.4 A4): builds a
-  * compressed per-(conv_id, bucket) segment from turns. Typed
-  * `Aggregator` — Spark plans it with map-side partial aggregation
-  * (`reduce`/`merge` run distributed; only `finish` pays the encode).
-  *
-  * The analog of the reference's per-variable write loop
-  * (`reshaper.py :: Slice2SeriesReshaper.convert` slab writes via
-  * `iobackend.py :: NCVariable.__setitem__`) — but as a shuffle-native
-  * aggregate instead of per-rank file IO.
-  *
-  * `maxPoints` caps points per sub-segment (the analog of chunked IO,
-  * `s2srun -c`): finish splits the sorted buffer into chunks with
-  * consecutive seq_no, keeping any single output row's memory bounded.
-  */
-class SegmentAgg(deflateLevel: Int, maxPoints: Int)
-    extends Aggregator[Turn, SegBuf, Seq[SegBlobs]] with Serializable {
-
-  override def zero: SegBuf = SegBuf.empty
-
-  override def reduce(b: SegBuf, t: Turn): SegBuf =
-    SegBuf(b.idx :+ t.turn_idx, b.ts :+ SegmentAgg.toMicros(t.ts),
-      b.role :+ t.role, b.tool :+ t.tool, b.text :+ t.text)
-
-  override def merge(a: SegBuf, b: SegBuf): SegBuf =
-    SegBuf(a.idx ++ b.idx, a.ts ++ b.ts, a.role ++ b.role,
-      a.tool ++ b.tool, a.text ++ b.text)
-
-  override def finish(b: SegBuf): Seq[SegBlobs] = {
-    val order = b.idx.indices.sortBy(b.idx(_)) // restore turn_idx order
-    order.grouped(maxPoints).zipWithIndex.map { case (chunk, seqNo) =>
-      SegBlobs(
-        seq_no = seqNo,
-        n = chunk.length,
-        tsBlob = Gorilla.encodeTimestamps(chunk.map(b.ts(_)).toArray),
-        idxBlob = Gorilla.encodeTimestamps(chunk.map(i => b.idx(i).toLong).toArray),
-        roleBlob = Gorilla.encodeStrings(chunk.map(b.role(_)).toArray),
-        toolBlob = Gorilla.encodeStrings(chunk.map(b.tool(_)).toArray),
-        textBlob = Gorilla.encodeTexts(chunk.map(b.text(_)).toArray, deflateLevel))
-    }.toSeq
-  }
-
-  override def bufferEncoder: Encoder[SegBuf] = Encoders.product[SegBuf]
-  override def outputEncoder: Encoder[Seq[SegBlobs]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[SegBlobs]]()
-}
-
 object SegmentAgg {
   /** Epoch MICROseconds — full Spark TimestampType precision (getTime alone
     * truncates to millis, which would break the per-turn equality invariant
@@ -89,7 +21,7 @@ object SegmentAgg {
   }
 }
 
-/** Numeric-series variant: (tsMillis, value) → DoD + Gorilla-XOR blobs.
+/** Numeric-series segment aggregate: (tsMicros, value) → DoD + Gorilla-XOR blobs.
   * Used for metric series (e.g. the events table's `value` column).
   *
   * `leastSignificantDigit` is the engine's analog of the reference's lossy

@@ -2,13 +2,12 @@ package graft.io
 
 import graft.Turn
 import org.apache.spark.sql.{DataFrame, Encoders}
-import org.apache.spark.sql.functions._
 
 /** Input inspection & validation (SURVEY.md §2.1 S2) — the analog of
   * PyReshaper's `_inspect_input_files`, which opens every input file,
   * checks the unlimited dimension and identical variable sets, and fails
-  * fast with a precise message. Here the schema check is static (one
-  * metadata read) and the row-level invariants are a single optional scan.
+  * fast with a precise message. Here the check is static: one metadata
+  * read, no scan of the rows.
   */
 object Validate {
 
@@ -29,31 +28,5 @@ object Validate {
       s"input schema mismatch — missing: ${missing.mkString(",")}; " +
         s"mistyped: ${mistyped.mkString("; ")}; " +
         s"got: ${df.schema.simpleString}")
-  }
-
-  /** Row-level invariants (one scan, aggregate-only):
-    *  - (conv_id, turn_idx) is unique — the stable total order the
-    *    equivalence invariant is defined over (input_hint)
-    *  - no null conv_id / ts
-    *  - null `role` rows are counted and WARNED about (tolerated: they
-    *    aggregate into turn totals but are absent from byRole maps, like
-    *    null tool)
-    * Returns the row count (callers reuse it instead of re-counting).
-    */
-  def rowInvariants(df: DataFrame): Long = {
-    val agg = df.agg(
-      count(lit(1)).as("n"),
-      count_distinct(col("conv_id"), col("turn_idx")).as("distinct_keys"),
-      count(when(col("conv_id").isNull || col("ts").isNull, 1)).as("bad_nulls"),
-      count(when(col("role").isNull, 1)).as("null_roles"))
-      .head()
-    val (n, distinct, badNulls, nullRoles) =
-      (agg.getLong(0), agg.getLong(1), agg.getLong(2), agg.getLong(3))
-    require(badNulls == 0, s"$badNulls rows with null conv_id/ts")
-    require(distinct == n,
-      s"(conv_id, turn_idx) not unique: $n rows, $distinct distinct keys")
-    if (nullRoles > 0)
-      println(s"[validate] WARN: $nullRoles rows with null role (kept in totals, absent from byRole)")
-    n
   }
 }

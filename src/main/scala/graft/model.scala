@@ -95,7 +95,6 @@ case class RollupConfig(
     outputRoot: String,
     tiers: Seq[Tier] = Tier.cascade,
     writeMode: String = "o",
-    saltBuckets: Int = 8,
     // files per (tier, pday) output partition: a hot day (most of the data
     // in one pday) would otherwise serialize into ONE parquet-writing task;
     // bounded salting caps the straggler at 1/N of the hot day while

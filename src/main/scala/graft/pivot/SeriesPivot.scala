@@ -1,9 +1,9 @@
 package graft.pivot
 
 import graft.{RollupConfig, Segment, Tier, Turn}
-import graft.codec.{Gorilla, SegBlobs, SegmentAgg}
+import graft.codec.{Gorilla, SegmentAgg}
 import graft.rollup.Rollups
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 
 /** Byte-level sort row of the streaming pivot: `text` stays UTF-8 bytes and
@@ -20,95 +20,20 @@ case class TurnB(conv_id: String, turn_idx: Int, role: String, tool: String,
   * BASELINE.json north_star): input rows arrive partitioned by TIME
   * (the "slice" layout — all conversations interleaved), output is
   * partitioned by SERIES `(conv_id, bucket)` with each series' turns
-  * pivoted into one compressed columnar segment — the analog of
+  * pivoted into one or more compressed columnar segments — the analog of
   * `reshaper.py :: Slice2SeriesReshaper.convert` turning N time-slice
   * files into one file per variable.
   *
-  * Two physical strategies, identical results (asserted in tests):
-  *
-  *  - [[segments]]: single hash-aggregate on `(conv_id, bucket)`. Spark
-  *    plans the typed Aggregator with map-side partial aggregation, so
-  *    each input partition pre-merges locally before the shuffle — the
-  *    weight-balanced work distribution of the reference
-  *    (`asaptools.partition.WeightBalanced`) falls out of hash
-  *    partitioning + AQE.
-  *
-  *  - [[segmentsSalted]]: explicit salted two-phase aggregation for hot
-  *    series (north_rule "salted-key skew handling for hot
-  *    conversations"): phase 1 aggregates `(conv_id, bucket, salt)` where
-  *    salt = hash(turn_idx) % S — a hot conversation's bucket spreads over
-  *    S reducers; phase 2 merges the S sub-buffers per (conv_id, bucket)
-  *    and re-sorts by turn_idx inside `finish` (SURVEY.md §7.4.3). Phase-2
-  *    input is S rows per series — skew-free by construction.
+  * One physical strategy, [[segmentsSorted]]: a hash exchange on
+  * `(conv_id, bucket)` (the weight-balanced work distribution of the
+  * reference, `asaptools.partition.WeightBalanced`, falls out of hash
+  * partitioning + AQE), an in-partition Tungsten sort on `turn_idx`, and a
+  * streaming encoder that cuts segments at `maxPointsPerSegment`, so a hot
+  * conversation never needs more than one segment's worth of memory.
   */
 object SeriesPivot {
 
-  private def bucketSecOf(tsMillis: Long, bucketSec: Long): Long =
-    Math.floorDiv(Math.floorDiv(tsMillis, 1000L), bucketSec) * bucketSec
-
-  /** Direct pivot: one shuffle on (conv_id, bucket). */
-  def segments(turns: Dataset[Turn], tier: Tier, cfg: RollupConfig): Dataset[Segment] = {
-    val spark = turns.sparkSession
-    import spark.implicits._
-    val agg = new SegmentAgg(cfg.deflateLevel, cfg.maxPointsPerSegment)
-    val bucketSec = tier.bucketSec
-    turns
-      .groupByKey(t => (t.conv_id, bucketSecOf(t.ts.getTime, bucketSec)))
-      .agg(agg.toColumn.name("blobs"))
-      .flatMap { case ((convId, bucket), blobs) =>
-        blobs.map(toSegment(convId, tier.name, bucket, _))
-      }
-  }
-
-  /** Salted two-phase pivot for skewed series. */
-  def segmentsSalted(turns: Dataset[Turn], tier: Tier, cfg: RollupConfig): Dataset[Segment] = {
-    val spark = turns.sparkSession
-    import spark.implicits._
-    val salt = math.max(1, cfg.saltBuckets)
-    val agg = new SegmentAgg(cfg.deflateLevel, Int.MaxValue) // no split mid-phase
-    val bucketSec = tier.bucketSec
-    // phase 1: aggregate per (conv_id, bucket, salt) — hot keys spread
-    val sub = turns
-      .groupByKey(t => (t.conv_id, bucketSecOf(t.ts.getTime, bucketSec),
-        Math.floorMod(t.turn_idx, salt)))
-      .agg(agg.toColumn.name("blobs"))
-    // phase 2: merge the ≤salt sub-segments per (conv_id, bucket); decode,
-    // concat, re-encode — finish() re-sorts by turn_idx
-    val merged = sub
-      .map { case ((convId, bucket, _), blobs) => (convId, bucket, blobs) }
-      .groupByKey { case (convId, bucket, _) => (convId, bucket) }
-      .mapGroups { (key: (String, Long), it: Iterator[(String, Long, Seq[SegBlobs])]) =>
-        val (convId, bucket) = key
-        val all = it.flatMap(_._3).toArray
-        val idx = all.flatMap(b => Gorilla.decodeTimestamps(b.idxBlob))
-        val ts = all.flatMap(b => Gorilla.decodeTimestamps(b.tsBlob))
-        val role = all.flatMap(b => Gorilla.decodeStrings(b.roleBlob))
-        val tool = all.flatMap(b => Gorilla.decodeStrings(b.toolBlob))
-        val text = all.flatMap(b => Gorilla.decodeTexts(b.textBlob))
-        val order = idx.indices.sortBy(idx(_)).toArray
-        val chunks = order.grouped(cfg.maxPointsPerSegment).zipWithIndex.map {
-          case (chunk, seqNo) =>
-            SegBlobs(seqNo, chunk.length,
-              Gorilla.encodeTimestamps(chunk.map(ts(_))),
-              Gorilla.encodeTimestamps(chunk.map(i => idx(i).toLong)),
-              Gorilla.encodeStrings(chunk.map(role(_))),
-              Gorilla.encodeStrings(chunk.map(tool(_))),
-              Gorilla.encodeTexts(chunk.map(text(_)), cfg.deflateLevel))
-        }.toSeq
-        (convId, bucket, chunks)
-      }
-      .flatMap { case (convId, bucket, chunks) =>
-        chunks.map(toSegment(convId, tier.name, bucket, _))
-      }
-    merged
-  }
-
-  private def toSegment(convId: String, tierName: String, bucket: Long,
-      b: SegBlobs): Segment =
-    Segment(convId, tierName, bucket, b.seq_no, b.n, b.tsBlob, b.idxBlob,
-      b.roleBlob, b.toolBlob, b.textBlob)
-
-  /** Sort-based streaming pivot — the primary physical strategy (SURVEY.md
+  /** Sort-based streaming pivot (SURVEY.md
     * §2.6 X1): hash-repartition on (conv_id, bucket), Tungsten
     * sortWithinPartitions (spillable, no per-row object buffers), then a
     * single streaming mapPartitions that cuts segments at group boundaries
@@ -116,9 +41,7 @@ object SeriesPivot {
     *
     * One shuffle of the raw rows, each row touched once, one encode per
     * segment. Memory is bounded by maxPointsPerSegment regardless of how
-    * hot a conversation is, so this handles skew WITHOUT salting; the
-    * salted two-phase variant remains for pathological single-key cases
-    * (results identical — asserted in tests).
+    * hot a conversation is, so this handles skew WITHOUT salting.
     */
   def segmentsSorted(turns: Dataset[Turn], tier: Tier, cfg: RollupConfig): Dataset[Segment] = {
     val spark = turns.sparkSession
@@ -198,7 +121,7 @@ object SeriesPivot {
       val text = Gorilla.decodeTexts(s.textBlob)
       Array.tabulate(s.n) { i =>
         Turn(s.conv_id, idx(i).toInt, role(i), text(i), tool(i),
-          graft.codec.SegmentAgg.fromMicros(ts(i)))
+          SegmentAgg.fromMicros(ts(i)))
       }
     }
   }

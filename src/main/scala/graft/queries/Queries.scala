@@ -111,7 +111,7 @@ object Queries {
     * tests").
     */
   def pivotRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val segs = SeriesPivot.segments(eventsAsTurns(s, dir), Tier.Day, cfg)
+    val segs = SeriesPivot.segmentsSorted(eventsAsTurns(s, dir), Tier.Day, cfg)
     SeriesPivot.decode(segs)
       .select(col("conv_id"), col("turn_idx"), col("role"),
         col("text"), col("ts"))
@@ -169,7 +169,7 @@ object Queries {
     */
   def segmentStats(s: SparkSession, dir: String): DataFrame =
     SeriesPivot.compressionStats(
-      SeriesPivot.segments(eventsAsTurns(s, dir), Tier.Day, cfg))
+      SeriesPivot.segmentsSorted(eventsAsTurns(s, dir), Tier.Day, cfg))
 
   // ------------------------------------------------------------- TPC-H ---
 

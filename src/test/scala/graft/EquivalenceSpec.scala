@@ -1,5 +1,6 @@
 package graft
 
+import graft.codec.{Gorilla, SegmentAgg}
 import graft.gen.Synth
 import graft.pivot.SeriesPivot
 
@@ -26,58 +27,73 @@ class EquivalenceSpec extends SparkSpec {
   }
 
   test("pivot → decode reproduces input exactly (1h tier)") {
-    val segs = SeriesPivot.segments(turns, Tier.Hour, cfg)
+    val segs = SeriesPivot.segmentsSorted(turns, Tier.Hour, cfg)
     val decoded = SeriesPivot.decode(segs)
     assertSameRows(decoded.toDF(), turns.toDF(), "pivot roundtrip 1h")
   }
 
   test("pivot → decode reproduces input exactly (1d tier)") {
-    val segs = SeriesPivot.segments(turns, Tier.Day, cfg)
+    val segs = SeriesPivot.segmentsSorted(turns, Tier.Day, cfg)
     assertSameRows(SeriesPivot.decode(segs).toDF(), turns.toDF(), "pivot roundtrip 1d")
   }
 
-  test("all three pivot strategies produce byte-identical segments") {
-    def canon(ds: org.apache.spark.sql.Dataset[Segment]) =
-      ds.map(s => (s.conv_id, s.bucket, s.seq_no, s.n, s.tsBlob.toSeq,
-        s.idxBlob.toSeq, s.roleBlob.toSeq, s.toolBlob.toSeq, s.textBlob.toSeq))
-    val direct = canon(SeriesPivot.segments(turns, Tier.Hour, cfg))
-    val salted = canon(SeriesPivot.segmentsSalted(turns, Tier.Hour, cfg))
-    val sorted = canon(SeriesPivot.segmentsSorted(turns, Tier.Hour, cfg))
-    assertSameRows(direct.toDF(), salted.toDF(), "salted == direct")
-    assertSameRows(direct.toDF(), sorted.toDF(), "sorted == direct")
-  }
-
-  test("sorted pivot → decode reproduces input exactly") {
-    val segs = SeriesPivot.segmentsSorted(turns, Tier.Hour, cfg)
-    assertSameRows(SeriesPivot.decode(segs).toDF(), turns.toDF(),
-      "sorted pivot roundtrip")
-  }
-
-  test("sorted pivot respects maxPointsPerSegment") {
-    val smallCap = cfg.copy(maxPointsPerSegment = 7)
-    val segs = SeriesPivot.segmentsSorted(turns, Tier.Day, smallCap).cache()
-    assert(segs.filter(_.n > 7).count() == 0, "segment over cap")
-    assertSameRows(SeriesPivot.decode(segs).toDF(), turns.toDF(),
-      "sorted split roundtrip")
+  test("pivot equals a plain-Scala reference pivot, segment for segment") {
+    // reference: group collected turns by (conv_id, bucket), sort by
+    // turn_idx, cut at maxPointsPerSegment, encode each chunk with Gorilla.
+    // The pivot runs over an arbitrary re-partitioning, so this also pins
+    // seq_no numbering and input-order invariance.
+    val cap = 7
+    val tier = Tier.Hour
+    type Canon = (String, Long, Int, Int, Seq[Byte], Seq[Byte], Seq[Byte], Seq[Byte], Seq[Byte])
+    val want: Seq[Canon] = turns.collect().toSeq
+      .groupBy { t =>
+        val sec = Math.floorDiv(SegmentAgg.toMicros(t.ts), 1000000L)
+        (t.conv_id, Math.floorDiv(sec, tier.bucketSec) * tier.bucketSec)
+      }
+      .toSeq.flatMap { case ((convId, bucket), group) =>
+        group.sortBy(_.turn_idx).grouped(cap).zipWithIndex.map { case (c, seqNo) =>
+          (convId, bucket, seqNo, c.length,
+            Gorilla.encodeTimestamps(c.map(t => SegmentAgg.toMicros(t.ts)).toArray).toSeq,
+            Gorilla.encodeTimestamps(c.map(_.turn_idx.toLong).toArray).toSeq,
+            Gorilla.encodeStrings(c.map(_.role).toArray).toSeq,
+            Gorilla.encodeStrings(c.map(_.tool).toArray).toSeq,
+            Gorilla.encodeTexts(c.map(_.text).toArray, cfg.deflateLevel).toSeq)
+        }
+      }
+    val got: Seq[Canon] = SeriesPivot.segmentsSorted(turns.repartition(7), tier,
+      cfg.copy(maxPointsPerSegment = cap)).collect().toSeq
+      .map(s => (s.conv_id, s.bucket, s.seq_no, s.n, s.tsBlob.toSeq, s.idxBlob.toSeq,
+        s.roleBlob.toSeq, s.toolBlob.toSeq, s.textBlob.toSeq))
+    assert(got.exists(_._3 > 0), "fixture never splits a series")
+    val key = (c: Canon) => (c._1, c._2, c._3)
+    val gotByKey = got.map(c => key(c) -> c).toMap
+    val differing = want.filterNot(w => gotByKey.get(key(w)).contains(w)).map(key)
+    if (got.size != want.size || differing.nonEmpty)
+      fail(s"${got.size} vs ${want.size} reference segments; differing keys: ${differing.take(5)}")
   }
 
   test("pivot is input-partitioning invariant") {
     val shuffled = turns.repartition(7) // arbitrary re-partitioning/order
-    val a = SeriesPivot.decode(SeriesPivot.segments(shuffled, Tier.Hour, cfg))
+    val a = SeriesPivot.decode(SeriesPivot.segmentsSorted(shuffled, Tier.Hour, cfg))
     assertSameRows(a.toDF(), turns.toDF(), "partitioning invariance")
   }
 
   test("segment split respects maxPointsPerSegment with consecutive seq_no") {
     val smallCap = cfg.copy(maxPointsPerSegment = 7)
-    val segs = SeriesPivot.segments(turns, Tier.Day, smallCap).cache()
+    val segs = SeriesPivot.segmentsSorted(turns, Tier.Day, smallCap).cache()
     assert(segs.filter(_.n > 7).count() == 0, "segment over cap")
+    val seqNos = segs.collect().groupBy(s => (s.conv_id, s.bucket))
+      .values.map(_.map(_.seq_no).sorted.toSeq)
+    assert(seqNos.exists(_.length > 1), "fixture never splits a series")
+    val gapped = seqNos.filterNot(ns => ns == ns.indices)
+    if (gapped.nonEmpty) fail(s"seq_no not 0..k-1: ${gapped.take(3)}")
     assertSameRows(SeriesPivot.decode(segs).toDF(), turns.toDF(), "split roundtrip")
   }
 
   test("compression: metadata blobs beat raw encoding on dense series") {
     // dense fixture: few conversations with many turns → long segments
     val dense = Synth.turns(spark, nConvs = 3, baseTurns = 4000, hotFactor = 1)
-    val segs = SeriesPivot.segments(dense, Tier.Day, cfg)
+    val segs = SeriesPivot.segmentsSorted(dense, Tier.Day, cfg)
     val stats = SeriesPivot.compressionStats(segs).collect()(0)
     val tsBpp = stats.getAs[Double]("tsBytesPerPoint")
     val metaBpp = stats.getAs[Double]("metaBytesPerPoint")
@@ -95,7 +111,7 @@ class EquivalenceSpec extends SparkSpec {
     // bit layout, deflate level, dictionary order, split boundaries —
     // moves at least one of these numbers.
     val dense = Synth.turns(spark, nConvs = 3, baseTurns = 4000, hotFactor = 1)
-    val segs = SeriesPivot.segments(dense, Tier.Day, cfg)
+    val segs = SeriesPivot.segmentsSorted(dense, Tier.Day, cfg)
     import org.apache.spark.sql.functions._
     val r = segs.toDF().agg(
       sum("n"), count(lit(1)),

@@ -270,6 +270,18 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("LeftAnti"), s"expected decontamination anti-join:\n$p")
   }
 
+  test("pivot queries run the sorted pivot, never a typed object hash aggregate") {
+    // pivot_roundtrip and segment_stats must pivot through the bounded-memory
+    // sort + streaming encoder, not an Aggregator that buffers whole series
+    Seq(Queries.pivotRoundtrip(spark, sfDir), Queries.segmentStats(spark, sfDir))
+      .foreach { df =>
+        val p = plan(df)
+        assert(!p.contains("ObjectHashAggregate"), s"typed aggregate pivot in plan:\n$p")
+        assert(p.contains("Sort (") && "_bucket#\\d+L? ASC".r.findFirstIn(p).nonEmpty,
+          s"missing the pivot's in-partition sort on (conv_id, _bucket, turn_idx):\n$p")
+      }
+  }
+
   test("pivot plan is one exchange + in-partition sort (no extra shuffle)") {
     val cfg = RollupConfig("", "")
     val p = plan(pivot.SeriesPivot.segmentsSorted(
