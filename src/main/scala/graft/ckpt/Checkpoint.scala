@@ -27,9 +27,6 @@ object Checkpoint {
   val LineageDir = "_lineage"
   val MetricsDir = "_metrics"
 
-  case class LineageRow(run_id: String, tier: String, pday: String,
-      rows: Long, committed_at: java.sql.Timestamp, input_fingerprint: String)
-
   def lineage(spark: SparkSession, io: TableIO, root: String): Option[DataFrame] = {
     val path = s"$root/$LineageDir"
     if (io.exists(spark, path)) Some(io.read(spark, path)) else None

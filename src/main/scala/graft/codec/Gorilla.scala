@@ -8,12 +8,12 @@ import scala.collection.mutable.ArrayBuffer
   * "Gorilla: A Fast, Scalable, In-Memory Time Series Database", VLDB 2015):
   *
   *  - [[encodeTimestamps]]/[[decodeTimestamps]]: delta-of-delta (DoD)
-  *    integer compression for monotone-ish long sequences (epoch millis,
+  *    integer compression for monotone-ish long sequences (epoch micros,
   *    turn_idx).
   *  - [[encodeValues]]/[[decodeValues]]: XOR float compression for doubles.
   *  - [[encodeStrings]]/[[decodeStrings]]: dictionary coding for small-vocab
   *    strings (role/tool).
-  *  - [[encodeTexts]]/[[decodeTexts]]: varint-length-prefixed UTF-8 +
+  *  - [[encodeTextBytes]]/[[decodeTexts]]: varint-length-prefixed UTF-8 +
   *    deflate — the analog of the reference's file-level deflate
   *    (`iobackend.py :: NCFile(mode='w', compression=…)`, netcdf4c).
   *
@@ -254,11 +254,6 @@ object Gorilla {
 
   // ------------------------------------------------------------ text blob ---
 
-  /** Length-prefixed UTF-8 concat, deflate-compressed. Layout: varint count;
-    * per text varint byteLen (null → len 0 with a preceding null-bitmap? —
-    * transcripts never have null text per input_hint, so nulls are encoded
-    * as empty strings); then 4-byte raw length + deflated payload.
-    */
   // Deflater/Inflater are expensive to construct (native zlib state); the
   // encoder runs once per segment inside executor tasks, so reuse per
   // (thread, level) with reset()
@@ -269,15 +264,13 @@ object Gorilla {
     override def initialValue() = new Inflater()
   }
 
-  def encodeTexts(vs: Array[String], level: Int = 6): Array[Byte] =
-    encodeTextBytes(vs.map(s =>
-      if (s == null) null else s.getBytes(StandardCharsets.UTF_8)), level)
-
-  /** Byte-level variant of [[encodeTexts]] — identical blob layout, but the
-    * caller supplies UTF-8 bytes directly (null → empty). This is the hot
-    * path of the sort-based pivot: text never materializes as a java.lang
-    * String between the columnar scan and the deflate stream, killing the
-    * UTF8String→String→UTF-8 double transcode per turn.
+  /** Length-prefixed UTF-8 concat, deflate-compressed. Layout: 4-byte
+    * big-endian raw length, then the deflated raw payload: varint count,
+    * per text varint byte length, then the texts' bytes. Null encodes as
+    * empty (transcripts never have null text per input_hint). The caller
+    * supplies UTF-8 bytes: this is the hot path of the sort-based pivot,
+    * so text never materializes as a java.lang.String between the columnar
+    * scan and the deflate stream.
     */
   def encodeTextBytes(vs: Array[Array[Byte]], level: Int = 6): Array[Byte] = {
     val head = ArrayBuffer[Byte]()

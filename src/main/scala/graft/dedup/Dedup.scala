@@ -113,14 +113,6 @@ object Dedup {
       .withColumn("rep_ratio",
         lit(1.0) - col("distinct_grams").cast("double") / col("total_grams"))
 
-  /** Per-row 64-bit gram-id array from an ALREADY-MATERIALIZED tokens
-    * column — the array flavor of [[shingleIds]] for membership checks
-    * that must stay row-local (e.g. streaming ingest gates, where the
-    * zero-matches-per-doc test can't be a stream-static anti-join).
-    */
-  def gramIdArray(tokens: Column, n: Int): Column =
-    transform(gramArray(tokens, n), g => xxhash64(g))
-
   /** Shared oversize-bucket fan-out guard for the candidate self-joins
     * (LSH bands, SimHash bands, SRP buckets, kNN probe buckets, posting
     * lists): one map-side-combined count per bucket key reduced to the

@@ -24,7 +24,7 @@ case class Turn(
   * time bucket, pivoted into columnar blobs (the analog of one time-series
   * output file in PyReshaper, `iobackend.py :: NCFile(mode='w')`).
   *
-  *  - tsBlob:  delta-of-delta compressed epoch-millis timestamps
+  *  - tsBlob:  delta-of-delta compressed epoch-micros timestamps
   *  - idxBlob: delta-of-delta compressed turn_idx values
   *  - roleBlob/toolBlob: dictionary-encoded small-vocab strings
   *  - textBlob: varint-length-prefixed UTF-8, deflate-compressed (the analog
@@ -41,17 +41,6 @@ case class Segment(
     roleBlob: Array[Byte],
     toolBlob: Array[Byte],
     textBlob: Array[Byte])
-
-/** A numeric-series segment (ts + double value), for metric series like
-  * `events.value` — Gorilla XOR value blob + DoD timestamp blob.
-  */
-case class ValueSegment(
-    series_id: Long,
-    tier: String,
-    bucket: Long,
-    n: Int,
-    tsBlob: Array[Byte],
-    valBlob: Array[Byte])
 
 /** One rolled-up point at a retention tier (FIXTURES.md §F3). All stats are
   * integral (Long/Int) so exact cross-parallelism equality is well-defined

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{RollupConfig, Tier, Turn}
 import graft.pivot.SeriesPivot
-import graft.rollup.GapFill
+import graft.rollup.{GapFill, Rollups}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -33,7 +33,7 @@ object Queries {
     s.read.parquet(s"$dir/documents.parquet")
 
   private def bucketCol(sec: Long): Column =
-    (floor(unix_timestamp(col("ts")) / sec) * sec).cast("long").as("bucket")
+    Rollups.bucketOf(col("ts"), sec).as("bucket")
 
   /** Base 1-minute rollup of the events series (one scan, one shuffle,
     * whole-stage codegen'd hash aggregate with map-side partials).
@@ -52,7 +52,7 @@ object Queries {
     */
   private def cascade(finer: DataFrame, sec: Long): DataFrame =
     finer
-      .withColumn("bucket", (floor(col("bucket") / sec) * sec).cast("long"))
+      .withColumn("bucket", Rollups.rebucket(col("bucket"), sec))
       .groupBy("user_id", "bucket")
       .agg(
         sum("n").as("n"),

@@ -29,13 +29,14 @@ import org.apache.spark.sql.functions._
   */
 object Rollups {
 
-  /** Epoch-second bucket start for a timestamp column (integral `div`, no
-    * double rounding — exact for any epoch value).
+  /** Epoch-second bucket start for a timestamp column — the engine's one
+    * floor-division bucket rule (pivot, cube and the events queries). The
+    * quotient is a double, exact for any epoch second below 2^52.
     */
   def bucketOf(ts: Column, bucketSec: Long): Column =
     rebucket(unix_timestamp(ts).cast("long"), bucketSec)
 
-  private def rebucket(epochSec: Column, bucketSec: Long): Column =
+  private[graft] def rebucket(epochSec: Column, bucketSec: Long): Column =
     floor(epochSec / bucketSec).cast("long") * bucketSec
 
   /** Finest-grain cube from raw turns: one scan, one shuffle.

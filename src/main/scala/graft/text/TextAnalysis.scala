@@ -126,12 +126,4 @@ object TextAnalysis {
     */
   def fingerprint(text: Column): Column =
     xxhash64(lower(regexp_replace(trim(text), "\\s+", " ")))
-
-  /** Second, independent 64-bit fingerprint over the SAME normalization
-    * (seed column decorrelates it from [[fingerprint]]). Keying dedup state
-    * on both makes silent 64-bit hash-collision loss negligible (~2^-128
-    * per pair) while state stays a few bytes per doc.
-    */
-  def fingerprint2(text: Column): Column =
-    xxhash64(lit(1), lower(regexp_replace(trim(text), "\\s+", " ")))
 }

@@ -57,7 +57,7 @@ class EquivalenceSpec extends SparkSpec {
             Gorilla.encodeTimestamps(c.map(_.turn_idx.toLong).toArray).toSeq,
             Gorilla.encodeStrings(c.map(_.role).toArray).toSeq,
             Gorilla.encodeStrings(c.map(_.tool).toArray).toSeq,
-            Gorilla.encodeTexts(c.map(_.text).toArray, cfg.deflateLevel).toSeq)
+            TextCodecRef.encodeTexts(c.map(_.text).toArray, cfg.deflateLevel).toSeq)
         }
       }
     val got: Seq[Canon] = SeriesPivot.segmentsSorted(turns.repartition(7), tier,

@@ -57,7 +57,7 @@ class FunctionsSpec extends SparkSpec {
     assert(n == 0)
   }
 
-  test("decode_doubles roundtrips a ValueSegment blob via SQL") {
+  test("decode_doubles roundtrips a ValueSegAgg blob via SQL") {
     GorillaFunctions.register(spark)
     val vals = Array(1.5, 2.25, 2.25, -3.75, 1e12, 0.0)
     val blob = graft.codec.Gorilla.encodeValues(vals)
