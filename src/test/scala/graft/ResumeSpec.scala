@@ -62,6 +62,19 @@ class ResumeSpec extends SparkSpec {
       .select("tier", "pday", "rows")
     val pointRows = jobPts.groupBy("tier", "pday").agg(count(lit(1)).as("rows"))
     assertSameRows(lineage, pointRows, "lineage rows == points per (tier, pday)")
+    // ... and each pday's segment count, under the coarsest tier's seg- name
+    val segLineage = ParquetTableIO.read(spark, s"$out/_lineage")
+      .filter(col("run_id") === "run-full" && col("tier") === "seg-1d")
+      .select("pday", "rows")
+    val segTable = ParquetTableIO.read(spark, s"$out/segments")
+    val segRows = segTable.groupBy("pday").agg(count(lit(1)).as("rows"))
+    assertSameRows(segLineage, segRows, "seg-1d lineage rows == segments per pday")
+    // run accounting: segments written and input rows
+    val m = ParquetTableIO.read(spark, s"$out/_metrics")
+      .filter(col("run_id") === "run-full")
+      .select("metric", "value").as[(String, Double)].collect().toMap
+    assert(m("segments_written") == segTable.count().toDouble)
+    assert(m("input_rows") == spark.read.parquet(inputPath).count().toDouble)
   }
 
   test("wmode 'w' fails when output exists") {
