@@ -1,18 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   private def esc(s: String): String = JsonEsc(s)
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", (cpus.toInt * 4).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "8388608")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder(LocalSession.envCpus(4)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen warm-up so the first measured query isn't charged for it
     // (count, not sum — summing 64-bit hashes overflows under ANSI mode).

@@ -22,22 +22,9 @@ object BenchScaling {
   private def session(cores: Int): SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
+    val s = LocalSession.builder(cores)
       .appName(s"graft-bench-$cores")
-      .config("spark.sql.shuffle.partitions", (cores * 4).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      // local bench inputs are a handful of ~13 MB files; default 128 MB
-      // bin-packing would cap scan parallelism at ~4 tasks
-      .config("spark.sql.files.maxPartitionBytes", "8388608")
       .config("spark.sql.files.openCostInBytes", "1048576")
-      // shuffle codec knob: zstd trades shuffle bytes for CPU (helped the
-      // pivot phase in spot tests, did not move whole-ladder efficiency —
-      // see BENCH/BASELINE.md); default stays lz4, override to re-test
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_CODEC", "lz4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
@@ -138,8 +125,7 @@ object BenchScaling {
     val Seq((n1, sec1, thr1), (n4, sec4, thr4)) = results
     val eff = (thr4 / thr1) / 4.0
     val pairsStr = pairs.map(p => f"${p._3}%.3f").mkString("[", ",", "]")
-    val codec = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_CODEC", "lz4")
-    val json = f"""{"metric":"scaling","turns":$inputRows,"n":$n1,"sec_n":$sec1%.2f,"sec_4n":$sec4%.2f,"thr_n":$thr1%.0f,"thr_4n":$thr4%.0f,"efficiency":$eff%.3f,"pair_efficiencies":$pairsStr,"invariant":$invariant,"codec":"$codec","metaBytesPerPoint":$metaBpp%.2f,"textBytesPerPoint":$textBpp%.2f}"""
+    val json = f"""{"metric":"scaling","turns":$inputRows,"n":$n1,"sec_n":$sec1%.2f,"sec_4n":$sec4%.2f,"thr_n":$thr1%.0f,"thr_4n":$thr4%.0f,"efficiency":$eff%.3f,"pair_efficiencies":$pairsStr,"invariant":$invariant,"metaBytesPerPoint":$metaBpp%.2f,"textBytesPerPoint":$textBpp%.2f}"""
     println(json)
 
     Files.createDirectories(Paths.get("BENCH"))
@@ -197,14 +183,11 @@ object BenchScaling {
          |B/point against ~1 KB/turn raw text.
          |""".stripMargin
     // BENCH/BASELINE.md is a curated full-ladder document — experiment
-    // runs write a per-levels file instead (codec-suffixed when the
-    // shuffle-codec knob departs from the default, so an experiment can
-    // never overwrite the committed default-codec evidence), and only
-    // overwrite the baseline when explicitly asked
-    val tag = if (codec == "lz4") "" else s"_$codec"
+    // runs write a per-levels file instead, and only overwrite the baseline
+    // when explicitly asked
     val target =
       if (sys.env.contains("GRAFT_BENCH_WRITE_BASELINE")) "BENCH/BASELINE.md"
-      else s"BENCH/SCALING_${n1}_$n4$tag.md"
+      else s"BENCH/SCALING_${n1}_$n4.md"
     Files.writeString(Paths.get(target), md)
     println(s"wrote $target (and appended BENCH/runs.jsonl)")
   }

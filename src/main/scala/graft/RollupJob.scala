@@ -135,11 +135,13 @@ object RollupJob {
     val sorted = cfg.tiers.sortBy(_.bucketSec)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.Duration
 
     // ---- segments (the pivot) at the coarsest tier: long segments amortize
     // per-segment encode cost; memory stays bounded via maxPointsPerSegment,
     // which also splits a hot conversation's bucket into several segments.
     val segTier = sorted.last
+    val segName = s"seg-${segTier.name}"
     // the segments are the job's ONLY full read of the raw table: the points
     // fold below decodes them (≈2% of raw bytes) instead of rescanning raw
     val segsTyped = SeriesPivot.segmentsSorted(turns, segTier, cfg)
@@ -147,8 +149,8 @@ object RollupJob {
     val segs = segsTyped.toDF().withColumn("pday", pdayCol)
     val segsToWrite =
       if (resume) segs.join(
-        broadcast(committed.filter(col("tier") === s"seg-${segTier.name}")
-          .select("pday")), Seq("pday"), "left_anti")
+        broadcast(committed.filter(col("tier") === segName).select("pday")),
+        Seq("pday"), "left_anti")
       else segs
     // ≤ writeSaltBuckets files per (tier, pday) partition: without any
     // repartition every shuffle task writes into every pday dir → files =
@@ -162,42 +164,47 @@ object RollupJob {
     val writeParts = spark.sessionState.conf.numShufflePartitions
     val writeSalt =
       pmod(xxhash64(col("conv_id")), lit(math.max(1, cfg.writeSaltBuckets)))
-    // ---- overlap discipline (the N→4N fixed-tail shave): table WRITES run
-    // in ONE serialized async chain — never two io.write in flight, so the
-    // session-level dynamic-partition-overwrite conf can't race and replay
-    // ordering (data partitions first, lineage append after) is preserved
-    // per table — while the MAIN thread materializes the points into the
-    // cache, overlapping the segments write's commit + listing tail.
-    timed("segments pivot (materialize)")(segsTyped.count())
-    var writeChain: Future[Any] = Future {
+
+    // the pass that materializes the segments cache also takes every count
+    // the job needs, per pday: segments, turns (sum of n, never a second raw
+    // scan) and the max event second (drives retention)
+    val committedSet = committedRows.toSet
+    val (segStats, _) = timed("segments pivot (materialize)")(segsTyped
+      .map(s => (s.bucket, s.n.toLong,
+        Math.floorDiv(graft.codec.Gorilla.decodeTimestamps(s.tsBlob).max, 1000000L)))
+      .toDF("bucket", "n", "t")
+      .groupBy(pdayCol.as("pday"))
+      .agg(count(lit(1)), sum("n"), max("t"))
+      .as[(String, Long, Long, Long)].collect().toSeq)
+    val segLineage = segStats.collect {
+      case (pday, nSegs, _, _) if !committedSet((segName, pday)) => (segName, pday, nSegs)
+    }
+    val inputRows = segStats.map(_._3).sum
+    val maxTsSec = segStats.map(_._4).maxOption
+    val segsWritten = segLineage.map(_._3).sum
+
+    // ---- overlap discipline: never two io.write in flight (the
+    // session-level dynamic-partition-overwrite conf can't race), data
+    // partitions before their lineage append. The segments write + commit
+    // runs in the background while this thread folds the points into the
+    // cache, overlapping the write's commit + listing tail.
+    val segsF = Future {
       timed("segments write")(
         io.write(segsToWrite.repartition(writeParts, col("pday"), writeSalt),
           segmentsPath, Seq("tier", "pday"), "overwrite"))
-      Checkpoint.commit(spark, io, cfg.outputRoot, cfg.runId,
-        segsToWrite.select(concat(lit("seg-"), col("tier")).as("tier"), col("pday")),
-        fingerprint)
-    }
-    val segsWrittenF = writeChain.asInstanceOf[Future[Long]]
-
-    // run stats (inputRows + max event time for retention) from the CACHED
-    // segments in ONE fused pass, never the raw table — keeps the job
-    // strictly single-raw-scan under every write mode. Submitted as a
-    // CONCURRENT Spark job (reads only the hot cache), awaited before
-    // retention.
-    val statsF: Future[(Long, Option[Long])] = Future {
-      segsTyped
-        .map(s => (s.n.toLong,
-          Math.floorDiv(graft.codec.Gorilla.decodeTimestamps(s.tsBlob).max, 1000000L)))
-        .toDF("n", "t")
-        .agg(coalesce(sum("n"), lit(0)).cast("long"), max("t"))
-        .as[(Long, Option[Long])].head()
+      Checkpoint.commitCounts(spark, io, cfg.outputRoot, cfg.runId,
+        segLineage.toDF("tier", "pday", "rows"), fingerprint)
     }
 
     // ---- rollup: every tier's points in ONE exchange-free fold over the
-    // cached segments, cached once — the single points write, the lineage
-    // counts and dims all read it
+    // cached segments, cached once — the points write and dims read it. The
+    // pass that materializes the cache also counts each (tier, pday): one
+    // point per (conv_id, bucket), so that is the partition's lineage count.
     val points = foldPoints(segsTyped, sorted).persist()
-    timed("points fold (materialize)")(points.count())
+    val (pointCounts, _) = timed("points fold (materialize)")(
+      points.groupBy("tier", "pday").count()
+        .as[(String, String, Long)].collect().toSeq)
+    val pointLineage = pointCounts.filterNot { case (t, d, _) => committedSet((t, d)) }
     val toWrite =
       if (resume) points.join(broadcast(committed), Seq("tier", "pday"), "left_anti")
       else points
@@ -211,22 +218,15 @@ object RollupJob {
         toWrite.drop(drop: _*)
       case None => toWrite
     }
-    // lineage: one point per (conv_id, bucket), so a partition's row count
-    // is its distinct (conv_id, bucket) count
-    val lineageCounts = written.groupBy("tier", "pday")
-      .agg(count(lit(1)).as("rows"))
-      .as[(String, String, Long)].collect().toSeq
     // all tiers in one write partitioned by (tier, pday) and one lineage
-    // commit, chained behind the segments write; a failed write propagates
-    // and skips every later one (serial semantics)
-    val pointsF = writeChain.map { _ =>
-      timed("points write")(
-        io.write(written.repartition(writeParts, col("pday"), writeSalt),
-          pointsPath, Seq("tier", "pday"), "overwrite"))
-      Checkpoint.commitCounts(spark, io, cfg.outputRoot, cfg.runId,
-        lineageCounts.toDF("tier", "pday", "rows"), fingerprint)
-    }
-    writeChain = pointsF
+    // commit, after the segments write has landed; a failed segments write
+    // propagates here and skips every later write
+    Await.result(segsF, Duration.Inf)
+    timed("points write")(
+      io.write(written.repartition(writeParts, col("pday"), writeSalt),
+        pointsPath, Seq("tier", "pday"), "overwrite"))
+    Checkpoint.commitCounts(spark, io, cfg.outputRoot, cfg.runId,
+      pointLineage.toDF("tier", "pday", "rows"), fingerprint)
 
     // ---- dimension table (O3, the `once`-file analog): conversation-level
     // attributes written once per run, derived from the cached coarsest
@@ -234,35 +234,31 @@ object RollupJob {
     // downstream queries. The `once` analog requires one TABLE per run, not
     // one file: at 10^8–10^9 conversations a coalesce(1) would funnel the
     // whole table through a single task, so this is a pinned multi-task
-    // write like the points/segments writes.
+    // write like the points/segments writes. It runs in the background
+    // while retention drops expired partitions of the other tables.
     val dims = points.filter(col("tier") === segTier.name).groupBy("conv_id").agg(
       sum("turns").as("turns_total"),
       sum("textLenSum").as("text_len_total"),
       min("bucket").as("first_bucket"),
       max("bucket").as("last_bucket"))
-    val dimsF = writeChain.map { _ =>
+    val dimsF = Future {
       io.write(dims.repartition(writeParts),
         s"${cfg.outputRoot}/dims", Seq.empty, "overwrite")
     }
-    writeChain = dimsF
 
-    // ---- retention: after every points/segments write has landed (the
-    // dims write may still be in flight — different table, no conf overlap)
-    Await.result(pointsF, scala.concurrent.duration.Duration.Inf)
     val reports = sorted.map { t =>
       TierReport(t.name,
-        written = lineageCounts.collect { case (t.name, _, n) => n }.sum,
+        written = pointLineage.collect { case (t.name, _, n) => n }.sum,
         skipped = committedRows.count(_._1 == t.name).toLong)
     }
-    val segsWritten = Await.result(segsWrittenF, scala.concurrent.duration.Duration.Inf)
-    val (inputRows, maxTsSec) =
-      Await.result(statsF, scala.concurrent.duration.Duration.Inf)
+    // ---- retention: after every points/segments write has landed (the
+    // dims write may still be in flight — different table, no conf overlap)
     val asOf = asOfSec.orElse(maxTsSec).getOrElse(0L)
     val retained = Retention(spark, io, pointsPath, cfg.tiers, asOf)
     // segments follow the COARSEST tier's retention (the safe policy:
     // segments are the decode source for every re-aggregation)
     Retention(spark, io, segmentsPath, Seq(segTier), asOf)
-    Await.result(dimsF, scala.concurrent.duration.Duration.Inf)
+    Await.result(dimsF, Duration.Inf)
     segsTyped.unpersist()
     points.unpersist()
     Checkpoint.recordMetrics(spark, io, cfg.outputRoot, cfg.runId, "run",
@@ -297,26 +293,18 @@ object RollupMain {
     val output = args(1)
     val mode = if (args.length > 2) args(2) else "o"
     val runId = if (args.length > 3) args(3) else "run-0"
-    val builder = SparkSession.builder()
-      .appName("graft-rollup")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // shuffle-codec knob (see BenchScaling note); default lz4
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_CODEC", "lz4"))
     // under spark-submit the master comes from --master (spark.master prop);
     // standalone runs fall back to local mode
-    if (!sys.props.contains("spark.master")) {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-      // 4x cores: per-partition encode cost varies with text bytes, so
-      // tasks==cores leaves cores idle behind stragglers
-      val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", (cpus.toInt * 4).toString)
-      builder.master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", shuffle)
-        .config("spark.sql.files.maxPartitionBytes", "8388608")
-        .config("spark.ui.enabled", "false")
-    }
-    val spark = builder.getOrCreate()
+    val builder =
+      if (sys.props.contains("spark.master")) SparkSession.builder()
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.adaptive.enabled", "true")
+      else {
+        val b = LocalSession.builder(LocalSession.envCpus(8))
+        sys.env.get("SPARK_GRAFT_SHUFFLE").foreach(b.config("spark.sql.shuffle.partitions", _))
+        b
+      }
+    val spark = builder.appName("graft-rollup").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val report = RollupJob.run(spark,
       RollupConfig(inputPath = input, outputRoot = output,

@@ -59,26 +59,23 @@ object Checkpoint {
       written.groupBy("tier", "pday").agg(count(lit(1)).as("rows")), fingerprint)
 
   /** Like [[commit]], but the caller supplies the per-(tier, pday) row
-    * counts directly — lets the job derive lineage from an already-cached
-    * upstream relation instead of re-scanning the written data.
+    * counts directly (`tier`, `pday`, `rows` columns) — lets the job pass
+    * the counts its materializing passes already hold instead of
+    * re-scanning the written data. The counts are a control-plane table
+    * (tiers × days rows): collected once, summed on the driver and written
+    * as one local relation in a single file, so the commit is one write.
     */
   def commitCounts(spark: SparkSession, io: TableIO, root: String, runId: String,
       counts: DataFrame, fingerprint: String): Long = {
     import spark.implicits._
-    val rows = counts
-      .withColumn("run_id", lit(runId))
-      .withColumn("committed_at", current_timestamp())
-      .withColumn("input_fingerprint", lit(fingerprint))
-      .select("run_id", "tier", "pday", "rows", "committed_at", "input_fingerprint")
-      .cache()
-    val total = rows.agg(sum("rows")).head().get(0) match {
-      case null => 0L
-      case v: Long => v
-    }
-    // control-plane table: single file per commit, not one per shuffle task
-    io.write(rows.coalesce(1), s"$root/$LineageDir", Seq.empty, "append")
-    rows.unpersist()
-    total
+    val rows = counts.select("tier", "pday", "rows")
+      .as[(String, String, Long)].collect().toSeq
+    io.write(rows.toDF("tier", "pday", "rows")
+      .select(lit(runId).as("run_id"), col("tier"), col("pday"), col("rows"),
+        current_timestamp().as("committed_at"),
+        lit(fingerprint).as("input_fingerprint"))
+      .coalesce(1), s"$root/$LineageDir", Seq.empty, "append")
+    rows.map(_._3).sum
   }
 
   /** Append one metrics row per (phase, metric). The engine analog of the

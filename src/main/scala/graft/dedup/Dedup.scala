@@ -46,10 +46,9 @@ import org.apache.spark.sql.functions._
   * The RETURNED DataFrame references the checkpoint, so the operator
   * cannot free it itself; blocks are released when the result's plan is
   * garbage-collected (Spark's ContextCleaner) — bounded by one posting
-  * table per in-flight result, not by session lifetime — or
-  * deterministically by the caller via [[releaseLocalCheckpoints]] once
-  * no further action will touch the plan (the bench harness instead
-  * sweeps all RDD-level persists between timed queries).
+  * table per in-flight result, not by session lifetime — or by a caller
+  * that unpersists RDD-level blocks (the bench harness sweeps all
+  * RDD-level persists between timed queries).
   * [[dupComponents]] additionally frees each superseded per-round
   * checkpoint itself (including on failure paths) and leaves only the
   * final labels materialization pinned (O(#docs) rows).
@@ -177,7 +176,6 @@ object Dedup {
         s"(size=$worst) — a hot shingle makes the exact posting self-join " +
         "quadratic; use minhashDupPairs(maxShingleDf) as the scale path or " +
         "raise maxPostingList")
-    val sizes = sh.groupBy("id").agg(count(lit(1)).as("sz"))
     // a shingle with document frequency 1 can never contribute to a pair:
     // dropping those postings BEFORE the quadratic self-join shrinks its
     // input to the (typically small) co-occurring subset without changing
@@ -188,6 +186,16 @@ object Dedup {
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
       .filter(col("id_a") < col("id_b"))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("c"))
+    withJaccard(inter, sh, minJaccard)
+  }
+
+  /** Exact Jaccard of each pair `(id_a, id_b, c)`, `c` the shared-shingle
+    * count, against both docs' shingle-set sizes in `sh`; keeps pairs at
+    * or above `minJaccard`.
+    */
+  private def withJaccard(inter: DataFrame, sh: DataFrame,
+      minJaccard: Double): DataFrame = {
+    val sizes = sh.groupBy("id").agg(count(lit(1)).as("sz"))
     inter
       .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
       .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
@@ -294,7 +302,6 @@ object Dedup {
         Seq("shingle"), "left_anti")
     val cands = lshCandidatePairs(minhashSignatures(shBand, k), k, bands,
       maxBandBucket)
-    val sizes = sh.groupBy("id").agg(count(lit(1)).as("sz"))
     // restrict posting join to candidate docs, then exact-verify
     val candDocs = cands.select(col("id_a").as("id"))
       .union(cands.select(col("id_b").as("id"))).distinct()
@@ -304,13 +311,7 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("c"))
       .join(cands, Seq("id_a", "id_b"), "left_semi")
-    inter
-      .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-      .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
-      .withColumn("jaccard",
-        col("c").cast("double") / (col("sz_a") + col("sz_b") - col("c")))
-      .filter(col("jaccard") >= minJaccard)
-      .select("id_a", "id_b", "jaccard")
+    withJaccard(inter, sh, minJaccard)
   }
 
   /** Default SimHash token hash: xxhash64 (codegen'd, 64 full bits). */
@@ -566,17 +567,10 @@ object Dedup {
     * `LogicalRDD` in the plan is unpersisted). `Dataset.unpersist` only
     * talks to the SQL cache manager and never touches RDD-level
     * checkpoint blocks, so without this the label-propagation loop would
-    * pin one O(#docs) copy per round until session GC. PUBLIC because the
-    * materialization contract pins posting/band/mapping tables for the
-    * life of a returned plan: a caller that is finished with an
-    * operator's result (or a bench harness between timed queries) calls
-    * this on the result to free them deterministically instead of
-    * waiting for ContextCleaner plan-GC. Safe only once no further
-    * action will touch the plan — checkpointed lineage is truncated and
-    * cannot be recomputed.
+    * pin one O(#docs) copy per round until session GC. Safe only once no
+    * further action will touch the plan — checkpointed lineage is
+    * truncated and cannot be recomputed.
     */
-  def releaseLocalCheckpoints(df: DataFrame): Unit = freeLocalCheckpoint(df)
-
   private def freeLocalCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>

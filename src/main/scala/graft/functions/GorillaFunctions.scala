@@ -128,7 +128,7 @@ object GorillaFunctions {
 
   def nfcNormalize(c: Column): Column = call_function("nfc_normalize", c)
 
-  private val fns: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  private[functions] val fns: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "gorilla_decode_longs" -> (es => GorillaDecodeLongs(es.head)),
     "gorilla_decode_doubles" -> (es => GorillaDecodeDoubles(es.head)),
     "gorilla_decode_strings" -> (es => GorillaDecodeStrings(es.head)),
@@ -157,20 +157,9 @@ object GorillaFunctions {
   * }}}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    def info(name: String) = new ExpressionInfo(classOf[GorillaDecodeLongs].getName, name)
-    e.injectFunction((FunctionIdentifier("gorilla_decode_longs"),
-      info("gorilla_decode_longs"), es => GorillaDecodeLongs(es.head)))
-    e.injectFunction((FunctionIdentifier("gorilla_decode_doubles"),
-      info("gorilla_decode_doubles"), es => GorillaDecodeDoubles(es.head)))
-    e.injectFunction((FunctionIdentifier("gorilla_decode_strings"),
-      info("gorilla_decode_strings"), es => GorillaDecodeStrings(es.head)))
-    e.injectFunction((FunctionIdentifier("gorilla_decode_texts"),
-      info("gorilla_decode_texts"), es => GorillaDecodeTexts(es.head)))
-    e.injectFunction((FunctionIdentifier("gorilla_explode"),
-      info("gorilla_explode"),
-      es => GorillaExplodeSegment(es(0), es(1), es(2), es(3))))
-    e.injectFunction((FunctionIdentifier("nfc_normalize"),
-      info("nfc_normalize"), es => NfcNormalize(es.head)))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    GorillaFunctions.fns.foreach { case (name, b) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GorillaDecodeLongs].getName, name), b))
+    }
 }

@@ -252,9 +252,6 @@ object Queries {
       .agg(count(lit(1)).as("n"),
         sum(floor(col("value") * 1e6)).cast("long").as("vsum_micro"))
 
-  /** Analytic window functions: per-user event sequence with running
-    * count and running micro-sum (ordered by ts, event_id).
-    */
   /** Time-based sliding aggregate (RANGE frame, not ROWS): for every
     * event, stats over that user's preceding hour — RANGE includes all
     * peers of the current timestamp, so the result is deterministic under
@@ -276,6 +273,9 @@ object Queries {
         max(col("value")).over(w).as("vmax_1h"))
   }
 
+  /** Analytic window functions: per-user event sequence with running
+    * count and running micro-sum (ordered by ts, event_id).
+    */
   def windowRunning(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -358,19 +358,25 @@ object Queries {
     * recomputes the exact transitive closure with a recursive CTE.
     */
   def dedupClusters(s: SparkSession, dir: String): DataFrame =
-    // exact-duplicate classes collapse to one representative BEFORE pair
-    // generation (Dedup.dupComponentsCollapsed): identical labels, but a
-    // viral m-copy class costs O(m) instead of m²/2 LSH candidate pairs —
-    // the corpus's injected exact copies exercise the collapse path.
-    // coalesce(text, ''): a null text shingles exactly like an empty text
-    // (gramArray's whole-text fallback emits [""] for both), so keying
-    // them together preserves the collapse⇔uncollapsed equivalence even
-    // on degenerate rows instead of leaning on the null-key singleton path
-    graft.dedup.Dedup.dupComponentsCollapsed(dupCorpus(s, dir), "doc_id",
+    minhashClusters(dupCorpus(s, dir))
+      .select(col("id").as("doc_id"), col("cluster").as("cluster_id"))
+
+  /** `(id, cluster)` for every corpus doc: MinHash+LSH pairs at tau=0.8 →
+    * connected components. Exact-duplicate classes collapse to one
+    * representative BEFORE pair generation (Dedup.dupComponentsCollapsed):
+    * identical labels, but a viral m-copy class costs O(m) instead of
+    * m²/2 LSH candidate pairs — the corpus's injected exact copies
+    * exercise the collapse path. coalesce(text, ''): a null text shingles
+    * exactly like an empty text (gramArray's whole-text fallback emits
+    * [""] for both), so keying them together preserves the
+    * collapse⇔uncollapsed equivalence even on degenerate rows instead of
+    * leaning on the null-key singleton path.
+    */
+  private def minhashClusters(corpus: DataFrame): DataFrame =
+    graft.dedup.Dedup.dupComponentsCollapsed(corpus, "doc_id",
       graft.text.TextAnalysis.fingerprint(coalesce(col("text"), lit(""))),
       reps => graft.dedup.Dedup.minhashDupPairs(reps, "doc_id", "text",
         n = 3, k = 32, bands = 16, minJaccard = 0.8))
-      .select(col("id").as("doc_id"), col("cluster").as("cluster_id"))
 
   /** Survivor selection per near-dup cluster — the keep-rule AFTER
     * cluster formation (FineWeb-style: keep the highest-QUALITY copy, not
@@ -382,10 +388,7 @@ object Queries {
     */
   def dedupSurvivors(s: SparkSession, dir: String): DataFrame = {
     val corpus = dupCorpus(s, dir)
-    val clusters = graft.dedup.Dedup.dupComponentsCollapsed(corpus, "doc_id",
-      graft.text.TextAnalysis.fingerprint(coalesce(col("text"), lit(""))),
-      reps => graft.dedup.Dedup.minhashDupPairs(reps, "doc_id", "text",
-        n = 3, k = 32, bands = 16, minJaccard = 0.8))
+    val clusters = minhashClusters(corpus)
     val scored = corpus.select(col("doc_id").as("id"),
       graft.text.TextAnalysis.quality(col("text")).getField("quality").as("q"))
     clusters.join(scored, "id")
