@@ -10,8 +10,8 @@ import java.nio.file.{Files, Paths}
   * efficiency ≥0.8 from N to 4N executors"; sandbox proxy per BASELINE.md:
   * same job, same input, local[8] vs local[32] on the 32-core host).
   *
-  * Runs the FULL pipeline (pivot → segments → 1m/1h/1d cascade → lineage)
-  * at both parallelism levels, verifies the outputs are identical
+  * Runs the FULL pipeline (pivot → segments → one-pass 1m/1h/1d fold →
+  * lineage) at both parallelism levels, verifies the outputs are identical
   * (parallelism invariance at scale), and writes BENCH/BASELINE.md with
   * throughput at both levels + efficiency = (thr@4N / thr@N) / 4.
   *
@@ -137,7 +137,7 @@ object BenchScaling {
       f"""# BENCH/BASELINE — measured scaling + compression
          |
          |Full pipeline (read → sort-based pivot → compressed segments →
-         |1m/1h/1d rollup cascade → lineage commits) on the deterministic
+         |one-pass 1m/1h/1d rollup fold → lineage commits) on the deterministic
          |synthetic transcript table (`graft.gen.Synth`, seed 42, skewed conv
          |sizes, gap patterns). Sandbox proxy for N vs 4N executors per
          |BASELINE.md: `local[$n1]` vs `local[$n4]`, same input, same code,

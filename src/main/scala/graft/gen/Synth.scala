@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   * parallel range).
   *
   * Skew: conversation c gets `hotFactor`× the base turn count when
-  * c % 97 == 0 (~1% hot conversations) — exercises the salted-key path
-  * (SURVEY.md §2.6 X2).
+  * c % 97 == 0 (~1% hot conversations) — the skew the pivot
+  * bounds by splitting a conv-day into `maxPointsPerSegment`-point segments.
   *
   * Gaps: turns whose minute-bucket hash hits ~5% are dropped — whole
   * missing 1m buckets to exercise gap-fill/interpolation (§2.5 W2).

@@ -1,7 +1,5 @@
 package graft.gen
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump a deterministic synthetic transcript table to parquet — input
   * producer for RollupMain runs and the scaling benchmark.
   *
@@ -13,13 +11,8 @@ object SynthMain {
     val nConvs = if (args.length > 1) args(1).toInt else 400
     val baseTurns = if (args.length > 2) args(2).toInt else 40
     val hot = if (args.length > 3) args(3).toInt else 20
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = graft.LocalSession.builder(graft.LocalSession.envCpus(8))
       .appName("graft-synth")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Synth.turns(spark, nConvs, baseTurns, hot).write.mode("overwrite").parquet(out)

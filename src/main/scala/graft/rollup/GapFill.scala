@@ -1,7 +1,7 @@
 package graft.rollup
 
 import graft.Tier
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,6 +25,28 @@ import org.apache.spark.sql.functions._
   */
 object GapFill {
 
+  /** What both fills share: the spine of every `step` bucket between each
+    * key's first and last point, LEFT OUTER joined to `points` (`_present`
+    * is true on observed rows), and per-key windows giving the nearest
+    * present bucket and value at or before (`prev`) and at or after
+    * (`next`) each row. The interpolation rule is the caller's.
+    */
+  private final class Spine(points: DataFrame, key: String, bucket: String, step: Long) {
+    val joined: DataFrame = points
+      .groupBy(key)
+      .agg(min(bucket).as("_lo"), max(bucket).as("_hi"))
+      .select(col(key), explode(sequence(col("_lo"), col("_hi"), lit(step))).as(bucket))
+      .join(points.withColumn("_present", lit(true)), Seq(key, bucket), "left_outer")
+
+    private val wAll = Window.partitionBy(key).orderBy(bucket)
+    private val wPrev = wAll.rowsBetween(Window.unboundedPreceding, 0)
+    private val wNext = wAll.rowsBetween(0, Window.unboundedFollowing)
+    val prevB: Column = last(when(col("_present"), col(bucket)), ignoreNulls = true).over(wPrev)
+    val nextB: Column = first(when(col("_present"), col(bucket)), ignoreNulls = true).over(wNext)
+    def prev(v: String): Column = last(col(v), ignoreNulls = true).over(wPrev)
+    def next(v: String): Column = first(col(v), ignoreNulls = true).over(wNext)
+  }
+
   /** Generic numeric gap-fill: for each `key`, add missing `bucket` rows at
     * `step` spacing between that key's min and max bucket, linearly
     * interpolating each column in `valueCols` (as doubles), with
@@ -32,27 +54,13 @@ object GapFill {
     */
   def fillSeries(points: DataFrame, key: String, bucket: String,
       valueCols: Seq[String], step: Long): DataFrame = {
-    val spine = points
-      .groupBy(key)
-      .agg(min(bucket).as("_lo"), max(bucket).as("_hi"))
-      .select(col(key), explode(sequence(col("_lo"), col("_hi"), lit(step))).as(bucket))
-    val joined = spine.join(points.withColumn("_present", lit(true)),
-      Seq(key, bucket), "left_outer")
-
-    val wAll = Window.partitionBy(key).orderBy(bucket)
-    val wPrev = wAll.rowsBetween(Window.unboundedPreceding, 0)
-    val wNext = wAll.rowsBetween(0, Window.unboundedFollowing)
-    val prevB = last(when(col("_present"), col(bucket)), ignoreNulls = true).over(wPrev)
-    val nextB = first(when(col("_present"), col(bucket)), ignoreNulls = true).over(wNext)
-
+    val s = new Spine(points, key, bucket, step)
     val filledCols = valueCols.map { v =>
-      val prevV = last(col(v), ignoreNulls = true).over(wPrev)
-      val nextV = first(col(v), ignoreNulls = true).over(wNext)
       when(col("_present"), col(v)).otherwise(
-        prevV + (nextV - prevV) * (col(bucket) - prevB) / (nextB - prevB)
+        s.prev(v) + (s.next(v) - s.prev(v)) * (col(bucket) - s.prevB) / (s.nextB - s.prevB)
       ).as(v)
     }
-    joined.select(
+    s.joined.select(
       Seq(col(key), col(bucket)) ++ filledCols :+
         coalesce(col("_present"), lit(false)).unary_!.as("filled"): _*)
   }
@@ -63,30 +71,15 @@ object GapFill {
     * byRole/byTool are empty maps on filled rows.
     */
   def fillPoints(points: DataFrame, tier: Tier): DataFrame = {
-    val spine = points
-      .groupBy("conv_id")
-      .agg(min("bucket").as("_lo"), max("bucket").as("_hi"))
-      .select(col("conv_id"),
-        explode(sequence(col("_lo"), col("_hi"), lit(tier.bucketSec))).as("bucket"))
-    val joined = spine.join(points.withColumn("_present", lit(true)),
-      Seq("conv_id", "bucket"), "left_outer")
-
-    val wAll = Window.partitionBy("conv_id").orderBy("bucket")
-    val wPrev = wAll.rowsBetween(Window.unboundedPreceding, 0)
-    val wNext = wAll.rowsBetween(0, Window.unboundedFollowing)
-    val prevB = last(when(col("_present"), col("bucket")), ignoreNulls = true).over(wPrev)
-    val nextB = first(when(col("_present"), col("bucket")), ignoreNulls = true).over(wNext)
-
-    def lerp(v: String) = {
-      val prevV = last(col(v), ignoreNulls = true).over(wPrev)
-      val nextV = first(col(v), ignoreNulls = true).over(wNext)
+    val s = new Spine(points, "conv_id", "bucket", tier.bucketSec)
+    def lerp(v: String) =
       // integral linear interpolation, truncating division (Long semantics;
       // operands stay far below 2^53 so the double division is exact)
-      prevV + (((nextV - prevV) * (col("bucket") - prevB)) / (nextB - prevB)).cast("long")
-    }
+      s.prev(v) + (((s.next(v) - s.prev(v)) * (col("bucket") - s.prevB)) /
+        (s.nextB - s.prevB)).cast("long")
     val emptyMap = map_from_arrays(
       array().cast("array<string>"), array().cast("array<bigint>"))
-    joined.select(
+    s.joined.select(
       col("conv_id"),
       coalesce(col("tier"), lit(tier.name)).as("tier"),
       col("bucket"),

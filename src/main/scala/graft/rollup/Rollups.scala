@@ -20,6 +20,9 @@ import org.apache.spark.sql.functions._
   *     tool)` grain from one scan, coarser tiers by RE-AGGREGATING the
   *     finer cube (sums of sums, min of mins), never by rescanning raw
   *     data. Tests and the benchmark check the job's points against it.
+  *     It is the one cube and the one cube→points fold: `cubeFromSegments`
+  *     and `pointsStreamed` only delegate to [[cube]] and [[points]], for
+  *     the benchmark's traced run until it runs the job instead.
   *   - All stats are integral (Long/Int) so results are EXACTLY equal at
   *     any parallelism (SURVEY.md §7.4.1) — no float accumulation order
   *     issues.
@@ -57,55 +60,20 @@ object Rollups {
         min("len").as("lenMin"),
         max("len").as("lenMax"))
 
-  /** Finest-grain cube decoded from pivoted segments instead of raw rows.
-    * The segments are ~2% of the raw table's bytes (Gorilla/DoD + deflate),
-    * so a cube built from them needs no second raw scan. Results are exactly
-    * equal to [[cube]] (the codecs are lossless; `len` uses code-point
-    * counts to match Spark's `length()`). Not on the job path any more
-    * ([[pointsFromSegments]] replaced it there); kept with [[cascadeCube]]
-    * and [[pointsStreamed]] for the benchmark's traced per-layer run and
-    * the plan audit.
+  /** [[cube]] over the decoded segments (the codec stores a null text as
+    * "", so its `len` is 0). Exists only for the benchmark's traced run
+    * (`perfbench/.../RollupFull.scala::traced`); the benchmark change that
+    * points that run at [[graft.RollupJob.run]] deletes it.
     */
-  def cubeFromSegments(segs: Dataset[graft.Segment], tier: Tier): DataFrame = {
-    val spark = segs.sparkSession
-    import spark.implicits._
-    val bucketSec = tier.bucketSec
-    segs.flatMap { s =>
-      val ts = graft.codec.Gorilla.decodeTimestamps(s.tsBlob)
-      val role = graft.codec.Gorilla.decodeStrings(s.roleBlob)
-      val tool = graft.codec.Gorilla.decodeStrings(s.toolBlob)
-      // code-point counts straight from UTF-8 bytes — the cube never
-      // materializes a String per turn (== Spark length() semantics)
-      val lens = graft.codec.Gorilla.decodeTextPointCounts(s.textBlob)
-      Array.tabulate(s.n) { i =>
-        val bucket = Math.floorDiv(Math.floorDiv(ts(i), 1000000L), bucketSec) * bucketSec
-        (s.conv_id, bucket, role(i), tool(i), lens(i))
-      }
-    }.toDF("conv_id", "bucket", "role", "tool", "len")
-      // ONE exchange on (conv_id, bucket): HashPartitioning(conv,bucket)
-      // satisfies the clustering of BOTH this 4-key cube aggregate (subset
-      // rule) and the downstream 2-key points() aggregate — Catalyst elides
-      // the second full shuffle of the cube, which at 1m grain is nearly
-      // row-per-turn sized
-      .repartition(col("conv_id"), col("bucket"))
-      .groupBy("conv_id", "bucket", "role", "tool")
-      .agg(
-        count(lit(1)).as("c"),
-        sum("len").cast("long").as("lenSum"),
-        min("len").as("lenMin"),
-        max("len").as("lenMax"))
-  }
+  def cubeFromSegments(segs: Dataset[graft.Segment], tier: Tier): DataFrame =
+    cube(graft.pivot.SeriesPivot.decode(segs), tier)
 
   /** Rollup cascade: re-bucket a finer cube into a coarser tier.
     * Input and output share the cube schema; only `bucket` coarsens.
-    * Same one-exchange shape as [[cubeFromSegments]]: partitioned by
-    * (conv_id, coarse bucket) so the aggregate AND the downstream points
-    * fold both run exchange-free.
     */
   def cascadeCube(finer: DataFrame, tier: Tier): DataFrame =
     finer
       .withColumn("bucket", rebucket(col("bucket"), tier.bucketSec))
-      .repartition(col("conv_id"), col("bucket"))
       .groupBy("conv_id", "bucket", "role", "tool")
       .agg(
         sum("c").as("c"),
@@ -142,67 +110,13 @@ object Rollups {
         lit(false).as("filled"))
   }
 
-  /** Row of a tier cube, for the typed streaming points fold. */
-  private[rollup] case class CubeRow(conv_id: String, bucket: Long,
-      role: String, tool: String, c: Long, lenSum: Long, lenMin: Int, lenMax: Int)
-
-  /** Streaming points fold — identical output to [[points]] (asserted in
-    * tests) with a cheaper physical shape than it: the cube is
-    * ALREADY hash-partitioned by (conv_id, bucket) ([[cubeFromSegments]] /
-    * [[cascadeCube]]), so a codegen'd Tungsten sortWithinPartitions plus
-    * one tight typed pass replaces the ObjectHashAggregate(collect_list)
-    * — no multi-million-entry object hash map, no per-group array churn,
-    * zero exchanges. PRECONDITION: rows of one (conv_id, bucket) must be
-    * co-partitioned — violating it silently emits one point per
-    * per-partition key-run instead of one per key, so this is
-    * `private[graft]`: external callers get the unconditional [[points]].
+  /** [[points]] under its former streaming name. Exists only for the
+    * benchmark's traced run (`perfbench/.../RollupFull.scala::traced`); the
+    * benchmark change that points that run at [[graft.RollupJob.run]]
+    * deletes it.
     */
-  private[graft] def pointsStreamed(cubeDf: DataFrame, tierName: String): DataFrame = {
-    val spark = cubeDf.sparkSession
-    import spark.implicits._
-    cubeDf
-      .select("conv_id", "bucket", "role", "tool", "c", "lenSum", "lenMin", "lenMax")
-      .sortWithinPartitions("conv_id", "bucket")
-      .as[CubeRow]
-      .mapPartitions { it =>
-        new Iterator[graft.RollupPoint] {
-          private var cur: CubeRow = _
-          private var have = false
-          private def nextGroup(): graft.RollupPoint = {
-            // `cur` holds the first row of the group
-            var turns = 0L; var lenSum = 0L
-            var lenMin = Int.MaxValue; var lenMax = Int.MinValue
-            val byRole = scala.collection.mutable.TreeMap.empty[String, Long]
-            val byTool = scala.collection.mutable.TreeMap.empty[String, Long]
-            val key = (cur.conv_id, cur.bucket)
-            var more = true
-            while (more) {
-              turns += cur.c; lenSum += cur.lenSum
-              if (cur.lenMin < lenMin) lenMin = cur.lenMin
-              if (cur.lenMax > lenMax) lenMax = cur.lenMax
-              if (cur.role != null)
-                byRole.update(cur.role, byRole.getOrElse(cur.role, 0L) + cur.c)
-              if (cur.tool != null)
-                byTool.update(cur.tool, byTool.getOrElse(cur.tool, 0L) + cur.c)
-              if (it.hasNext) {
-                cur = it.next()
-                more = (cur.conv_id, cur.bucket) == key
-              } else { more = false; have = false; cur = null }
-            }
-            if (cur != null) have = true
-            graft.RollupPoint(key._1, tierName, key._2, turns,
-              byRole.toMap, byTool.toMap, lenSum, lenMin, lenMax, filled = false)
-          }
-          override def hasNext: Boolean = have || it.hasNext
-          override def next(): graft.RollupPoint = {
-            if (!have) { cur = it.next(); have = true }
-            have = false
-            nextGroup()
-          }
-        }
-      }
-      .toDF()
-  }
+  private[graft] def pointsStreamed(cubeDf: DataFrame, tierName: String): DataFrame =
+    points(cubeDf, tierName)
 
   /** Mutable stats of one (tier, bucket) point in [[pointsFromSegments]]. */
   private final class PointAcc {

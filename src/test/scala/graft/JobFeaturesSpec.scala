@@ -2,6 +2,7 @@ package graft
 
 import graft.gen.Synth
 import graft.io.ParquetTableIO
+import graft.pivot.SeriesPivot
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -50,6 +51,70 @@ class JobFeaturesSpec extends SparkSpec {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
+  }
+
+  test("job outputs are invariant to partitioning, AQE, write salt, segment size and input layout") {
+    // the job's one fold (pointsFromSegments) is correct only while the
+    // pivot keeps each conv-day's segments consecutive in one partition;
+    // none of these settings may change what the job writes
+    val parts = "spark.sql.shuffle.partitions"
+    val aqe = "spark.sql.adaptive.enabled"
+    val before = Seq(parts, aqe).map(k => k -> spark.conf.getOption(k))
+    val input3 = s"$tmp/input-repartition-3"
+    spark.read.parquet(inputPath).repartition(3).write.parquet(input3)
+    case class Run(name: String, confs: Map[String, String],
+        cfg: RollupConfig => RollupConfig = identity, input: String = inputPath)
+    val runs = Seq(
+      Run("p1-aqe-off", Map(parts -> "1", aqe -> "false")),
+      Run("p7-aqe-on", Map(parts -> "7", aqe -> "true")),
+      Run("p16-salt1", Map(parts -> "16"), _.copy(writeSaltBuckets = 1)),
+      Run("seg7", Map.empty, _.copy(maxPointsPerSegment = 7)),
+      Run("input-repartition-3", Map.empty, input = input3))
+    def restore(): Unit = before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    val outs = try runs.map { r =>
+      restore()
+      r.confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      val out = s"$tmp/invariance-${r.name}"
+      RollupJob.run(spark, r.cfg(RollupConfig(r.input, out, runId = "inv")))
+      r -> out
+    } finally restore()
+
+    def table(out: String, t: String) = ParquetTableIO.read(spark, s"$out/$t")
+    def points(out: String) = table(out, "points").selectExpr("tier", "pday",
+      "conv_id", "bucket", "turns", "array_sort(map_entries(byRole)) AS br",
+      "array_sort(map_entries(byTool)) AS bt", "textLenSum", "textLenMin",
+      "textLenMax", "filled")
+    def lineage(out: String, segments: Boolean) = {
+      val seg = col("tier").startsWith("seg-")
+      table(out, "_lineage").filter(if (segments) seg else !seg)
+        .select("tier", "pday", "rows")
+    }
+    def segments(out: String) = table(out, "segments").drop("pday").as[Segment]
+    val input = spark.read.parquet(inputPath)
+    val (first, firstOut) = outs.head
+    outs.foreach { case (r, out) =>
+      assertSameRows(SeriesPivot.decode(segments(out)).toDF(), input,
+        s"${r.name}: segments decode to the input")
+      assertSameRows(points(out), points(firstOut), s"${r.name} vs ${first.name}: points")
+      assertSameRows(table(out, "dims"), table(firstOut, "dims"), s"${r.name} vs ${first.name}: dims")
+      assertSameRows(lineage(out, segments = false), lineage(firstOut, segments = false),
+        s"${r.name} vs ${first.name}: point lineage")
+    }
+    // more, smaller segments at 7 points each: compare segments only among
+    // the runs that share a segment size
+    outs.groupBy { case (r, _) => r.cfg(RollupConfig("", "")).maxPointsPerSegment }
+      .values.foreach { group =>
+        val (r0, out0) = group.head
+        group.tail.foreach { case (r, out) =>
+          assertSameRows(segments(out).toDF(), segments(out0).toDF(),
+            s"${r.name} vs ${r0.name}: segments")
+          assertSameRows(lineage(out, segments = true), lineage(out0, segments = true),
+            s"${r.name} vs ${r0.name}: seg-1d lineage")
+        }
+      }
   }
 
   test("connector seam: the whole job runs on ORC and matches parquet output") {

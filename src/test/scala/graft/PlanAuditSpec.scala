@@ -104,29 +104,6 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
-  test("cube + streamed points run on ONE exchange (subset-clustering elision)") {
-    // cubeFromSegments repartitions by (conv_id, bucket); that partitioning
-    // must satisfy BOTH the 4-key cube aggregate and the points fold — the
-    // whole segments→points path may contain exactly one exchange
-    val cfg = RollupConfig("", "")
-    val segs = pivot.SeriesPivot.segmentsSorted(
-      gen.Synth.tiny(spark), Tier.Day, cfg)
-      .persist()
-    segs.count()
-    val pts = rollup.Rollups.pointsStreamed(
-      rollup.Rollups.cubeFromSegments(segs, Tier.Minute), "1m")
-    pts.count() // materialize through AQE
-    val executed = pts.queryExecution.executedPlan.toString
-    // cut the plan at the cached segments boundary (InMemoryRelation prints
-    // its own build plan, whose pivot exchange is not re-executed)
-    val live = executed.linesIterator.takeWhile(!_.contains("InMemoryRelation")).mkString("\n")
-    val exchanges = "Exchange".r.findAllIn(live).size
-    assert(exchanges == 1, s"expected 1 exchange segments→points, got $exchanges:\n$live")
-    assert(!live.contains("ObjectHashAggregate"),
-      s"streamed fold must not plan an object hash aggregate:\n$live")
-    segs.unpersist()
-  }
-
   test("job fold of all tiers from segments adds no exchange before the write repartition") {
     val segs = pivot.SeriesPivot.segmentsSorted(
       gen.Synth.tiny(spark), Tier.Day, RollupConfig("", ""))
@@ -136,7 +113,8 @@ class PlanAuditSpec extends SparkSpec {
     toWrite.collect() // materialize through AQE
     val executed = toWrite.queryExecution.executedPlan.toString
     assert(executed.contains("InMemoryRelation"), s"fold does not read the cached segments:\n$executed")
-    // cut the plan at the cached segments boundary, as above
+    // cut the plan at the cached segments boundary (InMemoryRelation prints
+    // its own build plan, whose pivot exchange is not re-executed)
     val live = executed.linesIterator.takeWhile(!_.contains("InMemoryRelation")).mkString("\n")
     val exchanges = "Exchange".r.findAllIn(live).size
     assert(exchanges == 1 && live.contains("REPARTITION_BY_NUM"),

@@ -50,14 +50,6 @@ class RollupGoldenSpec extends SparkSpec {
     assert(got == want)
   }
 
-  test("streamed points fold equals the declarative fold (clustered cube)") {
-    import org.apache.spark.sql.functions.col
-    val clustered = Rollups.cube(turns, Tier.Minute)
-      .repartition(col("conv_id"), col("bucket"))
-    assert(asComparable(Rollups.pointsStreamed(clustered, "1m")) ==
-      asComparable(Rollups.points(Rollups.cube(turns, Tier.Minute), "1m")))
-  }
-
   test("cascade 1m→1h→1d equals direct computation at each tier") {
     val c1m = Rollups.cube(turns, Tier.Minute)
     val c1h = Rollups.cascadeCube(c1m, Tier.Hour)
