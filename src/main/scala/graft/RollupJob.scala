@@ -26,7 +26,7 @@ object RollupJob {
       tiers: Seq[TierReport], segmentsWritten: Long,
       retention: Map[String, String])
 
-  private def pdayCol = date_format(timestamp_seconds(col("bucket")), "yyyy-MM-dd")
+  private def pdayCol = Rollups.utcDay(col("bucket"))
 
   private def timed[T](phase: String)(f: => T): (T, Double) = {
     val t0 = System.nanoTime()
@@ -36,23 +36,15 @@ object RollupJob {
     (r, sec)
   }
 
-  /** wmode-'a' input predicate: `ts >= start of the day after minHw`
-    * (pdays are UTC day strings). A plain `>=` on the ts column against a
-    * timestamp literal so the scan can prune on min/max stats and partition
-    * transforms (pushdown asserted by PlanAuditSpec).
+  /** wmode-'a' input predicate: `ts >= start of the UTC day after minHw`,
+    * the first second whose [[Rollups.utcDay]] is past the high-water pday.
+    * A plain `>=` on the ts column against a timestamp literal so the scan
+    * can prune on min/max stats and partition transforms (pushdown asserted
+    * by PlanAuditSpec).
     */
-  private[graft] def appendPredicate(
-      tsType: org.apache.spark.sql.types.DataType, minHw: String)
-      : org.apache.spark.sql.Column = {
-    val nextDay = java.time.LocalDate.parse(minHw).plusDays(1)
-    val bound = tsType match {
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        lit(nextDay.atStartOfDay()) // wall-clock literal for NTZ tables
-      case _ =>
-        lit(java.sql.Timestamp.from(
-          nextDay.atStartOfDay(java.time.ZoneOffset.UTC).toInstant))
-    }
-    col("ts") >= bound
+  private[graft] def appendPredicate(minHw: String): org.apache.spark.sql.Column = {
+    val nextDaySec = (java.time.LocalDate.parse(minHw).toEpochDay + 1) * 86400L
+    col("ts") >= lit(java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(nextDaySec)))
   }
 
   /** The job's points: every tier folded from the pivot's segments in one
@@ -67,13 +59,6 @@ object RollupJob {
   def run(spark: SparkSession, cfg: RollupConfig,
       io: TableIO = ParquetTableIO, asOfSec: Option[Long] = None): RunReport = {
     import spark.implicits._
-    // CORRECTNESS PIN: pdays are UTC day strings by contract, but
-    // date_format renders in the session time zone — and the wmode-'a'
-    // high-water predicate compares ts against UTC day boundaries. In a
-    // non-UTC session the two would disagree and an append run could
-    // silently prune rows whose pday is not yet committed. Pin the zone so
-    // every caller gets the contract, not just the spark-submit main.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     val pointsPath = s"${cfg.outputRoot}/points"
     val segmentsPath = s"${cfg.outputRoot}/segments"
 
@@ -106,16 +91,15 @@ object RollupJob {
 
     // ---- wmode 'a': prune input below the committed high-water mark.
     // The predicate compares ts DIRECTLY against a timestamp literal (start
-    // of the day after the high-water pday, UTC — pdays are UTC day strings)
-    // so parquet/Iceberg can prune row groups on ts min/max stats and
-    // partition transforms; a date_format(ts) string comparison would force
-    // a full rescan of the raw table on every append run (PlanAuditSpec
-    // asserts the pushdown).
+    // of the UTC day after the high-water pday) so parquet/Iceberg can
+    // prune row groups on ts min/max stats and partition transforms; a
+    // date_format(ts) string comparison would force a full rescan of the
+    // raw table on every append run (PlanAuditSpec asserts the pushdown).
     val turns = if (cfg.writeMode == "a") {
       val hw = Checkpoint.highWater(spark, io, cfg.outputRoot)
       hw.values.minOption match {
         case Some(minHw) =>
-          turnsAll.filter(appendPredicate(inputDf.schema("ts").dataType, minHw))
+          turnsAll.filter(appendPredicate(minHw))
         case None => turnsAll
       }
     } else turnsAll
@@ -183,11 +167,11 @@ object RollupJob {
     val maxTsSec = segStats.map(_._4).maxOption
     val segsWritten = segLineage.map(_._3).sum
 
-    // ---- overlap discipline: never two io.write in flight (the
-    // session-level dynamic-partition-overwrite conf can't race), data
-    // partitions before their lineage append. The segments write + commit
-    // runs in the background while this thread folds the points into the
-    // cache, overlapping the write's commit + listing tail.
+    // ---- overlap discipline: data partitions land before their lineage
+    // append, and a failed write skips every later one (the Await below).
+    // The segments write + commit runs in the background while this thread
+    // folds the points into the cache, overlapping the write's commit +
+    // listing tail.
     val segsF = Future {
       timed("segments write")(
         io.write(segsToWrite.repartition(writeParts, col("pday"), writeSalt),
@@ -252,7 +236,7 @@ object RollupJob {
         skipped = committedRows.count(_._1 == t.name).toLong)
     }
     // ---- retention: after every points/segments write has landed (the
-    // dims write may still be in flight — different table, no conf overlap)
+    // dims write may still be in flight — a different table)
     val asOf = asOfSec.orElse(maxTsSec).getOrElse(0L)
     val retained = Retention(spark, io, pointsPath, cfg.tiers, asOf)
     // segments follow the COARSEST tier's retention (the safe policy:
@@ -297,13 +281,8 @@ object RollupMain {
     // standalone runs fall back to local mode
     val builder =
       if (sys.props.contains("spark.master")) SparkSession.builder()
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
-      else {
-        val b = LocalSession.builder(LocalSession.envCpus(8))
-        sys.env.get("SPARK_GRAFT_SHUFFLE").foreach(b.config("spark.sql.shuffle.partitions", _))
-        b
-      }
+      else LocalSession.builder(LocalSession.envCpus(8))
     val spark = builder.appName("graft-rollup").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val report = RollupJob.run(spark,

@@ -1,7 +1,7 @@
 package graft.codec
 
 import java.nio.charset.StandardCharsets
-import java.util.zip.{Deflater, Inflater}
+import java.util.zip.{DataFormatException, Deflater, Inflater}
 import scala.collection.mutable.ArrayBuffer
 
 /** Gorilla-style compression codecs (public algorithm: Pelkonen et al.,
@@ -18,8 +18,8 @@ import scala.collection.mutable.ArrayBuffer
   *    (`iobackend.py :: NCFile(mode='w', compression=…)`, netcdf4c).
   *
   * All methods are lossless round-trips (property-tested in
-  * CodecPropsSpec). Pure Scala/JDK — runs inside whole-stage-codegen'd
-  * plans as an Aggregator finish step, never on the driver.
+  * CodecPropsSpec). Pure Scala/JDK — runs inside executor tasks (the
+  * pivot's per-segment encode, the fold's and the SQL functions' decode).
   */
 object Gorilla {
 
@@ -317,8 +317,15 @@ object Gorilla {
     inflater.setInput(blob, 4, blob.length - 4)
     val raw = new Array[Byte](rawLen)
     var off = 0
-    while (off < rawLen && !inflater.finished())
-      off += inflater.inflate(raw, off, rawLen - off)
+    while (off < rawLen && !inflater.finished()) {
+      val n = inflater.inflate(raw, off, rawLen - off)
+      // a truncated or corrupt stream stalls (needsInput) instead of ending
+      if (n == 0 && (inflater.needsInput() || inflater.needsDictionary()))
+        throw new DataFormatException(s"text blob truncated at $off of $rawLen bytes")
+      off += n
+    }
+    if (off < rawLen)
+      throw new DataFormatException(s"text blob inflates to $off of $rawLen bytes")
     val c = new ByteCursor(raw)
     val n = readVarInt(c)
     val lens = new Array[Int](n)

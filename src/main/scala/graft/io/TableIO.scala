@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   *
   *   - append          → mode("append")
   *   - overwrite of    → dynamic partition overwrite
-  *     touched partitions (spark.sql.sources.partitionOverwriteMode=dynamic)
+  *     touched partitions (per-write option partitionOverwriteMode=dynamic)
   *   - createOrFail    → error if the table path already exists
   *   - partition drop  → directory delete (retention)
   *
@@ -52,29 +52,20 @@ sealed class FileTableIO(format: String) extends TableIO {
     fs.exists(p)
   }
 
-  // Serializes writes that share a session: the dynamic-overwrite conf is
-  // session-scoped, so two in-flight writes could race set/restore and one
-  // would silently run a STATIC overwrite (truncating sibling partitions).
-  // RollupJob already chains its writes; this is defense in depth.
+  // overwrite is dynamic (only the partitions present in df are replaced)
+  // through the per-write option, which Spark reads before the session
+  // conf: the caller's session is left as it was, and concurrent writes on
+  // one session share no state
   override def write(df: DataFrame, path: String, partitionCols: Seq[String],
-      mode: String): Unit = df.sparkSession.synchronized {
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    if (mode == "overwrite")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      val writer = df.write.mode(mode match {
-        case "overwrite" => "overwrite"
-        case "append" => "append"
-        case "errorIfExists" => "errorIfExists"
-        case other => sys.error(s"unsupported write mode: $other")
-      })
-      (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
-        .format(format).save(path)
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+      mode: String): Unit = {
+    val writer = mode match {
+      case "overwrite" =>
+        df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      case "append" | "errorIfExists" => df.write.mode(mode)
+      case other => sys.error(s"unsupported write mode: $other")
     }
+    (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
+      .format(format).save(path)
   }
 
   /** Local partition-drop: evaluate the predicate against the distinct

@@ -51,8 +51,8 @@ object SeriesPivot {
       .select(
         col("conv_id"), col("turn_idx"), col("role"), col("tool"),
         encode(col("text"), "UTF-8").as("textB"),
-        // cast: inputs may carry TIMESTAMP_NTZ (e.g. plain parquet); under
-        // the pinned UTC session the cast is value-preserving
+        // cast: the events queries pass TIMESTAMP_NTZ, read as UTC wall
+        // clock in their UTC session; the job's input is TIMESTAMP (Validate)
         unix_micros(col("ts").cast("timestamp")).as("tsu"),
         Rollups.bucketOf(col("ts"), bucketSec).as("_bucket"))
       .repartition(col("conv_id"), col("_bucket"))

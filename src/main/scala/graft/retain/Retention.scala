@@ -2,6 +2,7 @@ package graft.retain
 
 import graft.Tier
 import graft.io.TableIO
+import graft.rollup.Rollups
 import org.apache.spark.sql.SparkSession
 
 /** Retention pass (north_rule "a retention pass drops expired fine-grained
@@ -18,32 +19,19 @@ import org.apache.spark.sql.SparkSession
   */
 object Retention {
 
-  /** Cutoff pday (date string in `zone`) for a tier, or None if retained
-    * forever. `zone` must be the zone that rendered the table's `pday`
-    * partition values (the Spark session time zone — [[apply]] passes it),
-    * otherwise retention can shift by up to a day.
+  /** Cutoff pday (UTC day string, [[Rollups.utcDay]]) for a tier, or None
+    * if retained forever.
     */
-  def cutoffDay(tier: Tier, asOfSec: Long,
-      zone: java.time.ZoneId = java.time.ZoneOffset.UTC): Option[String] =
+  def cutoffDay(tier: Tier, asOfSec: Long): Option[String] =
     if (tier.retainBuckets < 0) None
-    else {
-      val cutoffSec = asOfSec - tier.retainBuckets * tier.bucketSec
-      Some(java.time.Instant.ofEpochSecond(cutoffSec).atZone(zone)
-        .toLocalDate.toString)
-    }
+    else Some(Rollups.utcDay(asOfSec - tier.retainBuckets * tier.bucketSec).toString)
 
   /** Drop expired partitions of `path` for every tier. Returns the applied
-    * (tier → cutoff pday) map. The cutoff is rendered in the SESSION time
-    * zone — the same zone `date_format` used to write the pday values.
+    * (tier → cutoff pday) map.
     */
   def apply(spark: SparkSession, io: TableIO, path: String, tiers: Seq[Tier],
       asOfSec: Long): Map[String, String] = {
-    // SHORT_IDS: Spark itself resolves session zones like 'PST' via the
-    // short-id map — without it a job that wrote all its data would crash
-    // here on ZoneRulesException
-    val zone = java.time.ZoneId.of(
-      spark.sessionState.conf.sessionLocalTimeZone, java.time.ZoneId.SHORT_IDS)
-    val cuts = tiers.flatMap(t => cutoffDay(t, asOfSec, zone).map(t.name -> _)).toMap
+    val cuts = tiers.flatMap(t => cutoffDay(t, asOfSec).map(t.name -> _)).toMap
     cuts.foreach { case (tierName, cut) =>
       io.dropPartitions(spark, path, s"tier = '$tierName' AND pday < '$cut'")
     }

@@ -34,13 +34,24 @@ object Rollups {
 
   /** Epoch-second bucket start for a timestamp column — the engine's one
     * floor-division bucket rule (pivot, cube and the events queries). The
-    * quotient is a double, exact for any epoch second below 2^52.
+    * quotient is a double, exact for any epoch second below 2^52; for a
+    * TIMESTAMP column neither step reads the session time zone.
     */
   def bucketOf(ts: Column, bucketSec: Long): Column =
     rebucket(unix_timestamp(ts).cast("long"), bucketSec)
 
   private[graft] def rebucket(epochSec: Column, bucketSec: Long): Column =
     floor(epochSec / bucketSec).cast("long") * bucketSec
+
+  /** The UTC day (`yyyy-MM-dd`, the `pday` partition value) of an epoch
+    * second: the one day rule, free of the session time zone. Column form
+    * for the job's writes, driver form for retention and append cutoffs.
+    */
+  def utcDay(epochSec: Column): Column =
+    date_from_unix_date(floor(epochSec / 86400L).cast("int")).cast("string")
+
+  def utcDay(epochSec: Long): java.time.LocalDate =
+    java.time.LocalDate.ofEpochDay(Math.floorDiv(epochSec, 86400L))
 
   /** Finest-grain cube from raw turns: one scan, one shuffle.
     * Output: conv_id, bucket, role, tool, c, lenSum, lenMin, lenMax.

@@ -95,6 +95,27 @@ class CodecPropsSpec extends AnyFunSuite {
     }
   }
 
+  test("a truncated or lying-header text blob fails instead of spinning") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val rng = new Random(47)
+    val blob = Gorilla.encodeTextBytes(
+      Array.fill(2000)(rng.alphanumeric.take(rng.nextInt(40)).mkString.getBytes("UTF-8")))
+    val truncated = blob.take(blob.length / 2)
+    // the header claims 100 more raw bytes than the stream holds
+    val rawLen = java.nio.ByteBuffer.wrap(blob).getInt
+    val lying = java.nio.ByteBuffer.allocate(blob.length).put(blob)
+      .putInt(0, rawLen + 100).array()
+    // a decode that spins never returns, so bound it from another thread
+    // (a time limit on the test's own thread cannot preempt a busy loop)
+    for ((name, b) <- Seq("truncated" -> truncated, "lying header" -> lying);
+        decode <- Seq[Array[Byte] => Any](Gorilla.decodeTexts, Gorilla.decodeTextPointCounts))
+      withClue(s"$name blob: ") {
+        intercept[java.util.zip.DataFormatException](Await.result(Future(decode(b)), 30.seconds))
+      }
+  }
+
   test("byte-level text encode is blob-identical; point counts match String semantics") {
     val rng = new scala.util.Random(7)
     (1 to 50).foreach { _ =>

@@ -3,11 +3,13 @@ package graft
 import graft.gen.Synth
 import graft.io.ParquetTableIO
 import graft.pivot.SeriesPivot
+import graft.rollup.Rollups
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 /** RollupJob orchestration features: dims table (once-file analog O3),
-  * output limit (X3), metric include-list (P2), multi-config run (O2).
+  * output limit (X3), metric include-list (P2), multi-config run (O2), and
+  * outputs that no caller session setting changes.
   */
 class JobFeaturesSpec extends SparkSpec {
   import spark.implicits._
@@ -18,18 +20,107 @@ class JobFeaturesSpec extends SparkSpec {
     Synth.tiny(spark).write.parquet(p)
     p
   }
+  // the tiny fixture moved to straddle UTC midnight: 2023-11-14T23:53:20Z
+  // to about 00:16 on 2023-11-15, one local day in Tokyo and another in
+  // Los Angeles
+  private lazy val midnightInput = {
+    val p = s"$tmp/input-midnight"
+    spark.read.parquet(inputPath)
+      .withColumn("ts", col("ts") + expr("INTERVAL 6000 SECONDS")).write.parquet(p)
+    p
+  }
 
-  test("run() pins the session time zone to the UTC pday contract") {
-    // pdays are UTC day strings and the wmode-'a' high-water predicate
-    // compares ts against UTC day boundaries — a caller embedding run() in
-    // a non-UTC session must not silently get disagreeing day math
-    spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
+  private def table(out: String, t: String) = ParquetTableIO.read(spark, s"$out/$t")
+  private def points(out: String) = table(out, "points").selectExpr("tier", "pday",
+    "conv_id", "bucket", "turns", "array_sort(map_entries(byRole)) AS br",
+    "array_sort(map_entries(byTool)) AS bt", "textLenSum", "textLenMin",
+    "textLenMax", "filled")
+  private def lineage(out: String, segments: Boolean) = {
+    val seg = col("tier").startsWith("seg-")
+    table(out, "_lineage").filter(if (segments) seg else !seg)
+      .select("tier", "pday", "rows")
+  }
+  private def segments(out: String) = table(out, "segments").drop("pday").as[Segment]
+
+  test("run() in a non-UTC session writes the UTC run's outputs and keeps the zone") {
+    // pdays and retention cutoffs are UTC days by construction, whatever
+    // the caller's session zone; at this asOf the 1m cutoff is 2023-11-15,
+    // so retention drops a pday
+    val asOf = Synth.Epoch + 7 * 86400L + 3 * 3600L
+    val zone = "spark.sql.session.timeZone"
+    def runIn(tz: String) = {
+      spark.conf.set(zone, tz)
+      try {
+        val out = s"$tmp/tz-${tz.replace('/', '-')}"
+        val r = RollupJob.run(spark, RollupConfig(midnightInput, out, runId = "tz"),
+          asOfSec = Some(asOf))
+        assert(spark.conf.get(zone) == tz, s"run() changed the session zone from $tz")
+        out -> r.retention
+      } finally spark.conf.set(zone, "UTC")
+    }
+    val (utcOut, utcCuts) = runIn("UTC")
+    assert(utcCuts("1m") == "2023-11-15")
+    val pdays = points(utcOut).groupBy("tier").agg(sort_array(collect_set("pday")))
+      .as[(String, Seq[String])].collect().toMap
+    assert(pdays == Map("1m" -> Seq("2023-11-15"),
+      "1h" -> Seq("2023-11-14", "2023-11-15"), "1d" -> Seq("2023-11-14", "2023-11-15")))
+    Seq("Asia/Tokyo", "America/Los_Angeles").foreach { tz =>
+      val (out, cuts) = runIn(tz)
+      assert(cuts == utcCuts, s"$tz: retention cutoffs")
+      def same(what: String, f: String => org.apache.spark.sql.DataFrame): Unit =
+        assertSameRows(f(out), f(utcOut), s"$tz vs UTC: $what")
+      same("points", points)
+      same("decoded segments", o => SeriesPivot.decode(segments(o)).toDF())
+      same("dims", table(_, "dims"))
+      same("point lineage", lineage(_, segments = false))
+      same("seg-1d lineage", lineage(_, segments = true))
+    }
+  }
+
+  test("overwrite is dynamic per write; a STATIC session keeps its mode") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val before = spark.conf.getOption(key)
+    val ref = s"$tmp/static-ref"
+    val out = s"$tmp/static"
+    val oneDay = s"$tmp/input-2023-11-15"
+    spark.read.parquet(midnightInput)
+      .filter(Rollups.utcDay(unix_timestamp(col("ts"))) === "2023-11-15")
+      .write.parquet(oneDay)
+    spark.conf.set(key, "STATIC")
     try {
-      val out = s"$tmp/tzpin"
-      RollupJob.run(spark, RollupConfig(inputPath, out, writeMode = "o",
-        runId = "tz-1"))
-      assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
-    } finally spark.conf.set("spark.sql.session.timeZone", "UTC")
+      RollupJob.run(spark, RollupConfig(midnightInput, ref, runId = "st-ref"))
+      RollupJob.run(spark, RollupConfig(midnightInput, out, runId = "st-1"))
+      // an o run over one day's input replaces that day's partitions only
+      RollupJob.run(spark, RollupConfig(oneDay, out, runId = "st-2"))
+      assert(spark.conf.get(key) == "STATIC")
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    assert(points(ref).select("pday").distinct().count() == 2)
+    assertSameRows(points(out), points(ref), "points after a one-day o run")
+    assertSameRows(SeriesPivot.decode(segments(out)).toDF(),
+      spark.read.parquet(midnightInput), "segments after a one-day o run decode to the input")
+  }
+
+  test("TIMESTAMP_NTZ input fails fast in Validate, before any shuffle") {
+    val ntzIn = s"$tmp/input-ntz"
+    spark.read.parquet(inputPath)
+      .withColumn("ts", col("ts").cast("timestamp_ntz")).write.parquet(ntzIn)
+    val out = s"$tmp/ntz"
+    val sc = spark.sparkContext
+    sc.setJobGroup("ntz-input", "TIMESTAMP_NTZ input")
+    val e = try intercept[IllegalArgumentException] {
+      RollupJob.run(spark, RollupConfig(ntzIn, out, runId = "ntz"))
+    } finally sc.clearJobGroup()
+    assert(e.getMessage.contains("mistyped: ts: got TimestampNTZType, want TimestampType"),
+      e.getMessage)
+    // the only Spark work is the reader's schema inference (a footer read)
+    val stages = sc.statusTracker.getJobIdsForGroup("ntz-input").toSeq
+      .flatMap(sc.statusTracker.getJobInfo(_)).flatMap(_.stageIds)
+      .flatMap(sc.statusTracker.getStageInfo(_)).map(_.name)
+    assert(stages.forall(_.startsWith("load at")), s"stages before the rejection: $stages")
+    assert(!new java.io.File(out).exists())
   }
 
   test("job points are the same whether AQE may re-plan cached output partitioning") {
@@ -41,10 +132,7 @@ class JobFeaturesSpec extends SparkSpec {
       spark.conf.set(key, v)
       val out = s"$tmp/cached-partitioning-$v"
       RollupJob.run(spark, RollupConfig(inputPath, out, runId = s"cp-$v"))
-      ParquetTableIO.read(spark, s"$out/points").selectExpr("tier", "pday",
-        "conv_id", "bucket", "turns", "array_sort(map_entries(byRole)) AS br",
-        "array_sort(map_entries(byTool)) AS bt", "textLenSum", "textLenMin",
-        "textLenMax", "filled")
+      points(out)
     }
     try assertSameRows(pointsWith("true"), pointsWith("false"), "conf true vs false")
     finally before match {
@@ -82,17 +170,6 @@ class JobFeaturesSpec extends SparkSpec {
       r -> out
     } finally restore()
 
-    def table(out: String, t: String) = ParquetTableIO.read(spark, s"$out/$t")
-    def points(out: String) = table(out, "points").selectExpr("tier", "pday",
-      "conv_id", "bucket", "turns", "array_sort(map_entries(byRole)) AS br",
-      "array_sort(map_entries(byTool)) AS bt", "textLenSum", "textLenMin",
-      "textLenMax", "filled")
-    def lineage(out: String, segments: Boolean) = {
-      val seg = col("tier").startsWith("seg-")
-      table(out, "_lineage").filter(if (segments) seg else !seg)
-        .select("tier", "pday", "rows")
-    }
-    def segments(out: String) = table(out, "segments").drop("pday").as[Segment]
     val input = spark.read.parquet(inputPath)
     outs.foreach { case (r, out) =>
       assertSameRows(SeriesPivot.decode(segments(out)).toDF(), input,

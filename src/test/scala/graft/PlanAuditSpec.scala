@@ -45,8 +45,7 @@ class PlanAuditSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("graft-append").toString
     gen.Synth.tiny(spark).write.parquet(s"$tmp/in")
     val in = spark.read.parquet(s"$tmp/in")
-    val pruned = in.filter(
-      RollupJob.appendPredicate(in.schema("ts").dataType, "2024-01-01"))
+    val pruned = in.filter(RollupJob.appendPredicate("2024-01-01"))
     val p = plan(pruned)
     assert(p.contains("PushedFilters") &&
       p.replaceAll("\\s+", " ").contains("GreaterThanOrEqual(ts"),
