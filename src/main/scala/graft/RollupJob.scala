@@ -5,7 +5,7 @@ import graft.io.{ParquetTableIO, TableIO}
 import graft.pivot.SeriesPivot
 import graft.retain.Retention
 import graft.rollup.Rollups
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** End-to-end job orchestration — the analog of the reference's
@@ -34,6 +34,38 @@ object RollupJob {
     val sec = (System.nanoTime() - t0) / 1e9
     println(f"[rollup] $phase: $sec%.1f s")
     (r, sec)
+  }
+
+  /** Rows one write task takes before an output partition is split over a
+    * second salt bucket; a segments partition counts its turns (the sum of
+    * n). The salt exists to keep a hot day from serializing into one
+    * parquet-writing task, not to cap file size, and every split adds a
+    * task, a file commit and a listing entry. On the benchmark's table
+    * (rollup_full, seed 11) a point takes about 21 B on disk and a turn
+    * about 28 B of segments, so 1M rows make a 20–30 MB file: still under
+    * one 128 MB parquet block, so a smaller file would only add files.
+    */
+  private[graft] final val RowsPerFile = 1000000L
+
+  /** Salt buckets, one file each, for an output partition of `rows` rows:
+    * `ceil(rows / RowsPerFile)`, at least 1 and at most `cap`
+    * (`RollupConfig.writeSaltBuckets`).
+    */
+  private[graft] def saltBuckets(rows: Long, cap: Int): Int =
+    math.max(1L, math.min(cap.toLong, (rows - 1) / RowsPerFile + 1)).toInt
+
+  /** The write repartition's salt: `conv_id` hashed over its (tier, pday)
+    * partition's [[saltBuckets]], from the partition's row count; a
+    * partition with one bucket (or no count) takes salt 0. Only split
+    * partitions get a CASE branch.
+    */
+  private[graft] def writeSalt(rows: Seq[((String, String), Long)], cap: Int): Column = {
+    val split = rows.map { case (part, n) => part -> saltBuckets(n, cap) }
+      .collect { case ((t, d), n) if n > 1 => (col("tier") === t && col("pday") === d) -> n }
+    if (split.isEmpty) lit(0)
+    else pmod(xxhash64(col("conv_id")), split.tail
+      .foldLeft(when(split.head._1, split.head._2)) { case (w, (c, n)) => w.when(c, n) }
+      .otherwise(1))
   }
 
   /** wmode-'a' input predicate: `ts >= start of the UTC day after minHw`,
@@ -130,126 +162,143 @@ object RollupJob {
     // fold below decodes them (≈2% of raw bytes) instead of rescanning raw
     val segsTyped = SeriesPivot.segmentsSorted(turns, segTier, cfg)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val segs = segsTyped.toDF().withColumn("pday", pdayCol)
-    val segsToWrite =
-      if (resume) segs.join(
-        broadcast(committed.filter(col("tier") === segName).select("pday")),
-        Seq("pday"), "left_anti")
-      else segs
-    // ≤ writeSaltBuckets files per (tier, pday) partition: without any
-    // repartition every shuffle task writes into every pday dir → files =
-    // partitions × days, and each dynamic-overwrite write pays a full table
-    // listing; with UNSALTED pday partitioning a hot day (one pday holding
-    // most of the data) serializes into a single parquet-writing task — the
-    // write-side analog of north_rule's hot-conversation skew. The salt
-    // bounds both: listing stays O(days × salt), the straggler shrinks by
-    // the salt factor. numPartitions is PINNED (REPARTITION_BY_NUM) so AQE
-    // can't coalesce write parallelism away on small data.
-    val writeParts = spark.sessionState.conf.numShufflePartitions
-    val writeSalt =
-      pmod(xxhash64(col("conv_id")), lit(math.max(1, cfg.writeSaltBuckets)))
-
-    // the pass that materializes the segments cache also takes every count
-    // the job needs, per pday: segments, turns (sum of n, never a second raw
-    // scan) and the max event second (drives retention)
-    val committedSet = committedRows.toSet
-    val (segStats, _) = timed("segments pivot (materialize)")(segsTyped
-      .map(s => (s.bucket, s.n.toLong,
-        Math.floorDiv(graft.codec.Gorilla.decodeTimestamps(s.tsBlob).max, 1000000L)))
-      .toDF("bucket", "n", "t")
-      .groupBy(pdayCol.as("pday"))
-      .agg(count(lit(1)), sum("n"), max("t"))
-      .as[(String, Long, Long, Long)].collect().toSeq)
-    val segLineage = segStats.collect {
-      case (pday, nSegs, _, _) if !committedSet((segName, pday)) => (segName, pday, nSegs)
-    }
-    val inputRows = segStats.map(_._3).sum
-    val maxTsSec = segStats.map(_._4).maxOption
-    val segsWritten = segLineage.map(_._3).sum
-
-    // ---- overlap discipline: data partitions land before their lineage
-    // append, and a failed write skips every later one (the Await below).
-    // The segments write + commit runs in the background while this thread
-    // folds the points into the cache, overlapping the write's commit +
-    // listing tail.
-    val segsF = Future {
-      timed("segments write")(
-        io.write(segsToWrite.repartition(writeParts, col("pday"), writeSalt),
-          segmentsPath, Seq("tier", "pday"), "overwrite"))
-      Checkpoint.commitCounts(spark, io, cfg.outputRoot, cfg.runId,
-        segLineage.toDF("tier", "pday", "rows"), fingerprint)
-    }
-
-    // ---- rollup: every tier's points in ONE exchange-free fold over the
-    // cached segments, cached once — the points write and dims read it. The
-    // pass that materializes the cache also counts each (tier, pday): one
-    // point per (conv_id, bucket), so that is the partition's lineage count.
+    // rollup: every tier's points in ONE exchange-free fold over the cached
+    // segments, cached once — the points write and dims read it
     val points = foldPoints(segsTyped, sorted).persist()
-    val (pointCounts, _) = timed("points fold (materialize)")(
-      points.groupBy("tier", "pday").count()
-        .as[(String, String, Long)].collect().toSeq)
-    val pointLineage = pointCounts.filterNot { case (t, d, _) => committedSet((t, d)) }
-    val toWrite =
-      if (resume) points.join(broadcast(committed), Seq("tier", "pday"), "left_anti")
-      else points
-    val written = cfg.metricsInclude match {
-      case Some(ms) =>
-        val drop = Seq(
-          "turns" -> Seq("turns"), "byRole" -> Seq("byRole"),
-          "byTool" -> Seq("byTool"),
-          "textLen" -> Seq("textLenSum", "textLenMin", "textLenMax"))
-          .filterNot { case (m, _) => ms.contains(m) }.flatMap(_._2)
-        toWrite.drop(drop: _*)
-      case None => toWrite
+    // every write the run starts in the background: the finally below waits
+    // for each, so a throw anywhere leaves no write running into the next
+    // run, and both caches are released on every exit
+    val background = scala.collection.mutable.ListBuffer.empty[Future[Unit]]
+    def inBackground(body: => Unit): Future[Unit] = {
+      val f = Future(body)
+      background += f
+      f
     }
-    // all tiers in one write partitioned by (tier, pday) and one lineage
-    // commit, after the segments write has landed; a failed segments write
-    // propagates here and skips every later write
-    Await.result(segsF, Duration.Inf)
-    timed("points write")(
-      io.write(written.repartition(writeParts, col("pday"), writeSalt),
-        pointsPath, Seq("tier", "pday"), "overwrite"))
-    Checkpoint.commitCounts(spark, io, cfg.outputRoot, cfg.runId,
-      pointLineage.toDF("tier", "pday", "rows"), fingerprint)
+    try {
+      val segs = segsTyped.toDF().withColumn("pday", pdayCol)
+      val segsToWrite =
+        if (resume) segs.join(
+          broadcast(committed.filter(col("tier") === segName).select("pday")),
+          Seq("pday"), "left_anti")
+        else segs
+      // write fan-out: each (tier, pday) partition's rows go to
+      // saltBuckets(rows) tasks, chosen from the exact counts the two
+      // materializing passes below collect. A small day is one task and one
+      // file; a hot day (one pday holding most of the data) still spreads
+      // over at most writeSaltBuckets tasks instead of serializing into one
+      // parquet-writing task. numPartitions is PINNED (REPARTITION_BY_NUM)
+      // so AQE can't coalesce write parallelism away on small data.
+      val writeParts = spark.sessionState.conf.numShufflePartitions
+      def forWrite(df: DataFrame, rows: Seq[((String, String), Long)]): DataFrame =
+        df.repartition(writeParts, col("tier"), col("pday"),
+          writeSalt(rows, cfg.writeSaltBuckets))
 
-    // ---- dimension table (O3, the `once`-file analog): conversation-level
-    // attributes written once per run, derived from the cached coarsest
-    // tier's points (no extra scan of raw data); broadcast-join side for
-    // downstream queries. The `once` analog requires one TABLE per run, not
-    // one file: at 10^8–10^9 conversations a coalesce(1) would funnel the
-    // whole table through a single task, so this is a pinned multi-task
-    // write like the points/segments writes. It runs in the background
-    // while retention drops expired partitions of the other tables.
-    val dims = points.filter(col("tier") === segTier.name).groupBy("conv_id").agg(
-      sum("turns").as("turns_total"),
-      sum("textLenSum").as("text_len_total"),
-      min("bucket").as("first_bucket"),
-      max("bucket").as("last_bucket"))
-    val dimsF = Future {
-      io.write(dims.repartition(writeParts),
-        s"${cfg.outputRoot}/dims", Seq.empty, "overwrite")
-    }
+      // the pass that materializes the segments cache also takes every count
+      // the job needs, per pday: segments, turns (sum of n, never a second
+      // raw scan) and the max event second (drives retention)
+      val committedSet = committedRows.toSet
+      val (segStats, _) = timed("segments pivot (materialize)")(segsTyped
+        .map(s => (s.bucket, s.n.toLong,
+          Math.floorDiv(graft.codec.Gorilla.decodeTimestamps(s.tsBlob).max, 1000000L)))
+        .toDF("bucket", "n", "t")
+        .groupBy(pdayCol.as("pday"))
+        .agg(count(lit(1)), sum("n"), max("t"))
+        .as[(String, Long, Long, Long)].collect().toSeq)
+      val segLineage = segStats.collect {
+        case (pday, nSegs, _, _) if !committedSet((segName, pday)) => (segName, pday, nSegs)
+      }
+      val inputRows = segStats.map(_._3).sum
+      val maxTsSec = segStats.map(_._4).maxOption
+      val segsWritten = segLineage.map(_._3).sum
 
-    val reports = sorted.map { t =>
-      TierReport(t.name,
-        written = pointLineage.collect { case (t.name, _, n) => n }.sum,
-        skipped = committedRows.count(_._1 == t.name).toLong)
+      // ---- overlap discipline: data partitions land before their lineage
+      // append, and a failed write skips every later one (the Await below).
+      // The segments write + commit runs in the background while this thread
+      // folds the points into the cache, overlapping the write's commit +
+      // listing tail.
+      val segsF = inBackground {
+        timed("segments write")(
+          io.write(forWrite(segsToWrite, segStats.map(s => (segTier.name, s._1) -> s._3)),
+            segmentsPath, Seq("tier", "pday"), "overwrite"))
+        Checkpoint.commitCounts(spark, io, cfg.outputRoot, cfg.runId,
+          segLineage.toDF("tier", "pday", "rows"), fingerprint)
+      }
+
+      // the pass that materializes the points cache also counts each
+      // (tier, pday): one point per (conv_id, bucket), so that is the
+      // partition's lineage count and its write fan-out
+      val (pointCounts, _) = timed("points fold (materialize)")(
+        points.groupBy("tier", "pday").count()
+          .as[(String, String, Long)].collect().toSeq)
+      val pointLineage = pointCounts.filterNot { case (t, d, _) => committedSet((t, d)) }
+      val toWrite =
+        if (resume) points.join(broadcast(committed), Seq("tier", "pday"), "left_anti")
+        else points
+      val written = cfg.metricsInclude match {
+        case Some(ms) =>
+          val drop = Seq(
+            "turns" -> Seq("turns"), "byRole" -> Seq("byRole"),
+            "byTool" -> Seq("byTool"),
+            "textLen" -> Seq("textLenSum", "textLenMin", "textLenMax"))
+            .filterNot { case (m, _) => ms.contains(m) }.flatMap(_._2)
+          toWrite.drop(drop: _*)
+        case None => toWrite
+      }
+      // all tiers in one write partitioned by (tier, pday) and one lineage
+      // commit, after the segments write has landed; a failed segments write
+      // propagates here and skips every later write
+      Await.result(segsF, Duration.Inf)
+      timed("points write")(
+        io.write(forWrite(written, pointCounts.map { case (t, d, n) => (t, d) -> n }),
+          pointsPath, Seq("tier", "pday"), "overwrite"))
+      Checkpoint.commitCounts(spark, io, cfg.outputRoot, cfg.runId,
+        pointLineage.toDF("tier", "pday", "rows"), fingerprint)
+
+      // ---- dimension table (O3, the `once`-file analog): conversation-level
+      // attributes written once per run, derived from the cached coarsest
+      // tier's points (no extra scan of raw data); broadcast-join side for
+      // downstream queries. The `once` analog requires one TABLE per run, not
+      // one file: it is written straight from its aggregation's shuffle, so
+      // its file count follows that shuffle's (AQE-sized) partitions and no
+      // single task funnels 10^8–10^9 conversations. It runs in the
+      // background while retention drops expired partitions of the other
+      // tables.
+      val dims = points.filter(col("tier") === segTier.name).groupBy("conv_id").agg(
+        sum("turns").as("turns_total"),
+        sum("textLenSum").as("text_len_total"),
+        min("bucket").as("first_bucket"),
+        max("bucket").as("last_bucket"))
+      val dimsF = inBackground {
+        timed("dims write")(
+          io.write(dims, s"${cfg.outputRoot}/dims", Seq.empty, "overwrite"))
+      }
+
+      val reports = sorted.map { t =>
+        TierReport(t.name,
+          written = pointLineage.collect { case (t.name, _, n) => n }.sum,
+          skipped = committedRows.count(_._1 == t.name).toLong)
+      }
+      // ---- retention: after every points/segments write has landed (the
+      // dims write may still be in flight — a different table). Segments
+      // follow the COARSEST tier's retention (the safe policy: segments are
+      // the decode source for every re-aggregation).
+      val asOf = asOfSec.orElse(maxTsSec).getOrElse(0L)
+      val (retained, _) = timed("retention") {
+        val cuts = Retention(spark, io, pointsPath, cfg.tiers, asOf)
+        Retention(spark, io, segmentsPath, Seq(segTier), asOf)
+        cuts
+      }
+      Await.result(dimsF, Duration.Inf)
+      Checkpoint.recordMetrics(spark, io, cfg.outputRoot, cfg.runId, "run",
+        Map("input_rows" -> inputRows.toDouble,
+          "segments_written" -> segsWritten.toDouble) ++
+          reports.map(r => s"points_${r.tier}" -> r.written.toDouble))
+      RunReport(cfg.runId, inputRows, reports, segsWritten, retained)
+    } finally {
+      background.foreach(Await.ready(_, Duration.Inf))
+      segsTyped.unpersist()
+      points.unpersist()
     }
-    // ---- retention: after every points/segments write has landed (the
-    // dims write may still be in flight — a different table)
-    val asOf = asOfSec.orElse(maxTsSec).getOrElse(0L)
-    val retained = Retention(spark, io, pointsPath, cfg.tiers, asOf)
-    // segments follow the COARSEST tier's retention (the safe policy:
-    // segments are the decode source for every re-aggregation)
-    Retention(spark, io, segmentsPath, Seq(segTier), asOf)
-    Await.result(dimsF, Duration.Inf)
-    segsTyped.unpersist()
-    points.unpersist()
-    Checkpoint.recordMetrics(spark, io, cfg.outputRoot, cfg.runId, "run",
-      Map("input_rows" -> inputRows.toDouble,
-        "segments_written" -> segsWritten.toDouble) ++
-        reports.map(r => s"points_${r.tier}" -> r.written.toDouble))
-    RunReport(cfg.runId, inputRows, reports, segsWritten, retained)
   }
 
   /** Run several configs in one session with combined accounting — the

@@ -1,7 +1,9 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Storage abstraction (SURVEY.md §2.1 S5, §7.4.6) — the analog of the
   * reference's pluggable IO backend (`iobackend.py :: set_backend`,
@@ -47,7 +49,7 @@ sealed class FileTableIO(format: String) extends TableIO {
   }
 
   override def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.exists(p)
   }
@@ -68,40 +70,38 @@ sealed class FileTableIO(format: String) extends TableIO {
       .format(format).save(path)
   }
 
-  /** Local partition-drop: evaluate the predicate against the distinct
-    * partition tuples, then delete matching partition directories. (Iceberg:
+  /** Local partition-drop: list the `col=value` partition directories,
+    * evaluate the predicate over a local relation of their values and
+    * delete the matching directories. The relation is planned and filtered
+    * on the driver, so a drop launches no Spark job, never reads the table
+    * (an empty table with no data file is fine) and sets no session conf.
+    * Values compare as strings, like [[read]]'s partition columns. (Iceberg:
     * `DELETE FROM t WHERE <predicate>` — a metadata-only partition drop.)
     */
   override def dropPartitions(spark: SparkSession, path: String, predicate: String): Unit = {
-    if (!exists(spark, path)) return
-    val df = read(spark, path)
-    val partCols = partitionColumnsOf(spark, path)
-    if (partCols.isEmpty) return
-    val doomed = df.select(partCols.map(col): _*).distinct()
-      .filter(predicate).collect()
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    doomed.foreach { row =>
-      val rel = partCols.zipWithIndex
-        .map { case (c, i) => s"$c=${row.get(i)}" }.mkString("/")
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/$rel"), true)
-    }
-  }
-
-  private def partitionColumnsOf(spark: SparkSession, path: String): Seq[String] = {
-    // partition dirs look like col=value at successive levels
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def levels(cur: org.apache.hadoop.fs.Path, acc: List[String]): List[String] = {
-      val subdirs = fs.listStatus(cur).filter(_.isDirectory)
-        .map(_.getPath.getName).filter(_.contains("="))
-      if (subdirs.isEmpty) acc.reverse
-      else {
-        val c = subdirs.head.split("=")(0)
-        levels(new org.apache.hadoop.fs.Path(cur, subdirs.head), c :: acc)
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root)) return
+    // every partition directory with its (column, value) pairs: a leaf
+    // that holds files (a drop leaves its parent `col=value` dir empty)
+    def partitions(dir: Path, kv: Vector[(String, String)]): Seq[(Path, Vector[(String, String)])] = {
+      val (dirs, files) = fs.listStatus(dir).toSeq.partition(_.isDirectory)
+      val sub = dirs.filter(_.getPath.getName.contains("="))
+      if (sub.isEmpty) (if (kv.nonEmpty && files.nonEmpty) Seq(dir -> kv) else Nil)
+      else sub.flatMap { s =>
+        val Array(c, v) = s.getPath.getName.split("=", 2)
+        partitions(s.getPath, kv :+ (c -> unescapePathName(v)))
       }
     }
-    levels(p, Nil)
+    val parts = partitions(root, Vector.empty)
+    if (parts.isEmpty) return
+    val cols = parts.head._2.map(_._1)
+    val pathCol = "__partition_path"
+    val schema = StructType((cols :+ pathCol).map(StructField(_, StringType)))
+    val rows = parts.map { case (dir, kv) => Row.fromSeq(kv.map(_._2) :+ dir.toString) }
+    val doomed = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      .filter(predicate).select(pathCol).collect()
+    doomed.foreach(r => fs.delete(new Path(r.getString(0)), true))
   }
 }
 

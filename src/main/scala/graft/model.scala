@@ -84,10 +84,11 @@ case class RollupConfig(
     outputRoot: String,
     tiers: Seq[Tier] = Tier.cascade,
     writeMode: String = "o",
-    // files per (tier, pday) output partition: a hot day (most of the data
-    // in one pday) would otherwise serialize into ONE parquet-writing task;
-    // bounded salting caps the straggler at 1/N of the hot day while
-    // keeping listing cost at N files per partition
+    // upper bound on the files (write tasks) per (tier, pday) output
+    // partition: the job gives each partition one file per ~1M rows
+    // (RollupJob.saltBuckets), so a small day is one file, and a hot day
+    // (most of the data in one pday) spreads over at most N tasks instead
+    // of serializing into ONE parquet-writing task
     writeSaltBuckets: Int = 8,
     maxPointsPerSegment: Int = 65536,
     deflateLevel: Int = 6,

@@ -1,15 +1,20 @@
 package graft
 
 import graft.gen.Synth
-import graft.io.ParquetTableIO
+import graft.io.{OrcTableIO, ParquetTableIO, TableIO}
 import graft.pivot.SeriesPivot
+import graft.retain.Retention
 import graft.rollup.Rollups
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** RollupJob orchestration features: dims table (once-file analog O3),
-  * output limit (X3), metric include-list (P2), multi-config run (O2), and
-  * outputs that no caller session setting changes.
+  * output limit (X3), metric include-list (P2), multi-config run (O2),
+  * outputs that no caller session setting changes, the write fan-out,
+  * empty input, job-free retention and a failed run's clean-up.
   */
 class JobFeaturesSpec extends SparkSpec {
   import spark.implicits._
@@ -41,6 +46,74 @@ class JobFeaturesSpec extends SparkSpec {
       .select("tier", "pday", "rows")
   }
   private def segments(out: String) = table(out, "segments").drop("pday").as[Segment]
+
+  /** Data files of a table, by the partition directory that holds them. */
+  private def dataFiles(dir: String): Map[String, Int] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+      else if (f.getName.startsWith("part-")) Seq(f) else Nil
+    walk(new java.io.File(dir)).groupBy(_.getParent).map { case (d, fs) =>
+      new java.io.File(dir).toPath.relativize(new java.io.File(d).toPath).toString -> fs.size }
+  }
+
+  /** Spark jobs this thread starts while `body` runs. Listener events
+    * arrive asynchronously but in order, so once the listener has seen a
+    * marker job run afterwards, it has seen every earlier job start.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = groups.add(
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    def inGroup(g: String)(f: => Unit): Unit = {
+      sc.setJobGroup(g, g)
+      try f finally sc.clearJobGroup()
+    }
+    try {
+      inGroup("measured")(body)
+      inGroup("marker")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!groups.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains("marker"), "the listener never saw the marker job")
+      groups.asScala.count(_ == "measured")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Parquet with one table's write or partition drop made to fail, and one
+    * table's writes held back a second. The failure waits until the held
+    * write has started, so a background write is running when it hits.
+    * `inFlight` counts writes not yet ended.
+    */
+  private class FailingIO(failWrite: String = "", failDrop: String = "",
+      slowWrite: String) extends TableIO {
+    val inFlight = new java.util.concurrent.atomic.AtomicInteger
+    private val slowStarted = new java.util.concurrent.CountDownLatch(1)
+    private def is(path: String, table: String) = table.nonEmpty && path.endsWith(s"/$table")
+    private def fail(what: String): Nothing = {
+      assert(slowStarted.await(30, java.util.concurrent.TimeUnit.SECONDS), "no held write started")
+      sys.error(s"injected failure $what")
+    }
+    def read(spark: SparkSession, path: String): DataFrame = ParquetTableIO.read(spark, path)
+    def exists(spark: SparkSession, path: String): Boolean = ParquetTableIO.exists(spark, path)
+    def write(df: DataFrame, path: String, partitionCols: Seq[String], mode: String): Unit = {
+      inFlight.incrementAndGet()
+      try {
+        if (is(path, slowWrite)) {
+          slowStarted.countDown()
+          Thread.sleep(1000)
+        }
+        if (is(path, failWrite)) fail(s"writing $path")
+        ParquetTableIO.write(df, path, partitionCols, mode)
+      } finally inFlight.decrementAndGet()
+    }
+    def dropPartitions(spark: SparkSession, path: String, predicate: String): Unit = {
+      if (is(path, failDrop)) fail(s"dropping from $path")
+      ParquetTableIO.dropPartitions(spark, path, predicate)
+    }
+  }
 
   test("run() in a non-UTC session writes the UTC run's outputs and keeps the zone") {
     // pdays and retention cutoffs are UTC days by construction, whatever
@@ -189,6 +262,90 @@ class JobFeaturesSpec extends SparkSpec {
         same("seg-1d lineage", lineage(_, segments = true))
       } else assert(segments(out).count() > segments(firstOut).count(),
         "7-point segments split no conv-day")
+    }
+  }
+
+  test("saltBuckets: one bucket per RowsPerFile rows, clamped to [1, cap]") {
+    val r = RollupJob.RowsPerFile
+    val rows = Seq(0L, 1L, r, r + 1, 100 * r)
+    assert(rows.map(RollupJob.saltBuckets(_, 8)) == Seq(1, 1, 1, 2, 8))
+    assert(rows.map(RollupJob.saltBuckets(_, 1)) == Seq(1, 1, 1, 1, 1))
+    // the salt spreads a split partition over its buckets and leaves the
+    // others (one bucket, or no count) on salt 0
+    val df = Seq("1m", "1h", "1d").flatMap(t => (1 to 200).map(i => (t, "2023-11-14", s"c$i")))
+      .toDF("tier", "pday", "conv_id")
+    val salts = df.withColumn("s", RollupJob.writeSalt(Seq(("1m", "2023-11-14") -> 4 * r,
+        ("1h", "2023-11-14") -> r, ("1d", "2023-11-15") -> 3 * r), cap = 8))
+      .groupBy("tier").agg(sort_array(collect_set("s")))
+      .as[(String, Seq[Long])].collect().toMap
+    assert(salts == Map("1m" -> Seq(0L, 1L, 2L, 3L), "1h" -> Seq(0L), "1d" -> Seq(0L)))
+  }
+
+  test("write fan-out: one file per small (tier, pday) partition and one dims file") {
+    val out = s"$tmp/fanout"
+    RollupJob.run(spark, RollupConfig(inputPath, out, runId = "fan"))
+    val points = dataFiles(s"$out/points")
+    assert(points.keySet == Set("tier=1m", "tier=1h", "tier=1d").map(_ + "/pday=2023-11-14"))
+    Seq("points" -> points, "segments" -> dataFiles(s"$out/segments")).foreach { case (t, files) =>
+      assert(files.nonEmpty && files.values.forall(_ == 1), s"$t files per partition: $files")
+    }
+    assert(dataFiles(s"$out/dims") == Map("" -> 1))
+  }
+
+  test("empty input: an o run then an a run succeed and write empty tables") {
+    val emptyIn = s"$tmp/input-empty"
+    spark.read.parquet(inputPath).limit(0).write.parquet(emptyIn)
+    val out = s"$tmp/empty"
+    Seq("o", "a").foreach { mode =>
+      val r = RollupJob.run(spark, RollupConfig(emptyIn, out, writeMode = mode, runId = s"empty-$mode"))
+      assert(r.inputRows == 0 && r.segmentsWritten == 0, s"$mode: $r")
+      assert(r.tiers.map(t => (t.tier, t.written, t.skipped)) ==
+        Seq(("1m", 0L, 0L), ("1h", 0L, 0L), ("1d", 0L, 0L)), s"$mode: $r")
+    }
+    assert(dataFiles(s"$out/points").isEmpty && dataFiles(s"$out/segments").isEmpty)
+    assert(table(out, "dims").count() == 0)
+    assert(table(out, "_lineage").count() == 0)
+    val inputRows = table(out, "_metrics").filter(col("metric") === "input_rows")
+      .select("run_id", "value").as[(String, Double)].collect().toMap
+    assert(inputRows == Map("empty-o" -> 0.0, "empty-a" -> 0.0))
+  }
+
+  test("retention lists partition directories and launches no Spark job, on parquet and ORC") {
+    val orcIn = s"$tmp/input-orc-retention"
+    spark.read.parquet(inputPath).write.orc(orcIn)
+    Seq[(String, TableIO, String)](("parquet", ParquetTableIO, inputPath),
+        ("orc", OrcTableIO, orcIn)).foreach { case (name, io, in) =>
+      val out = s"$tmp/retention-$name"
+      RollupJob.run(spark, RollupConfig(in, out, runId = "ret"), io = io)
+      def tiers = dataFiles(s"$out/points").keySet.map(_.takeWhile(_ != '/'))
+      assert(tiers == Set("tier=1m", "tier=1h", "tier=1d"), name)
+      // a year past the input expires the 7-day 1m and the 90-day 1h tiers
+      val asOf = Synth.Epoch + 365 * 86400L
+      val jobs = jobsDuring(Retention(spark, io, s"$out/points", Tier.cascade, asOf))
+      assert(jobs == 0, s"$name: retention ran $jobs Spark jobs")
+      assert(tiers == Set("tier=1d"), name)
+    }
+  }
+
+  test("a failed run leaves no write running and no cache behind; the next run succeeds") {
+    val sc = spark.sparkContext
+    val cases = Seq(
+      // retention fails while the dims write is still in flight
+      "retention" -> new FailingIO(failDrop = "points", slowWrite = "dims"),
+      // the segments write fails while this thread folds the points
+      "segments write" -> new FailingIO(failWrite = "segments", slowWrite = "segments"))
+    cases.foreach { case (what, io) =>
+      val out = s"$tmp/failed-${what.replace(' ', '-')}"
+      val cached = sc.getPersistentRDDs.keySet
+      val e = intercept[RuntimeException](
+        RollupJob.run(spark, RollupConfig(inputPath, out, runId = "fail"), io = io))
+      assert(e.getMessage.contains("injected failure"), s"$what: ${e.getMessage}")
+      assert(io.inFlight.get == 0, s"$what: a write still runs after run() threw")
+      assert(sc.getPersistentRDDs.keySet == cached, s"$what: run() left its caches persisted")
+      val r = RollupJob.run(spark, RollupConfig(inputPath, out, runId = "after"))
+      assert(r.inputRows == Synth.tiny(spark).count(), what)
+      assert(table(out, "dims").count() ==
+        spark.read.parquet(inputPath).select("conv_id").distinct().count(), what)
     }
   }
 
