@@ -18,6 +18,7 @@ import org.apache.spark.sql.functions._
   * exchange-free pass → one points write partitioned by (tier, pday) → one
   * lineage commit per table → retention pass → metrics. Resumable per write
   * mode (Checkpoint).
+  * Per-conversation totals (O3) are not stored: [[dims]] derives them.
   */
 object RollupJob {
 
@@ -28,12 +29,11 @@ object RollupJob {
 
   private def pdayCol = Rollups.utcDay(col("bucket"))
 
-  private def timed[T](phase: String)(f: => T): (T, Double) = {
+  private def timed[T](phase: String)(f: => T): T = {
     val t0 = System.nanoTime()
     val r = f
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(f"[rollup] $phase: $sec%.1f s")
-    (r, sec)
+    println(f"[rollup] $phase: ${(System.nanoTime() - t0) / 1e9}%.1f s")
+    r
   }
 
   /** Rows one write task takes before an output partition is split over a
@@ -85,8 +85,22 @@ object RollupJob {
   private[graft] def foldPoints(segs: Dataset[Segment], tiers: Seq[Tier]): DataFrame =
     Rollups.pointsFromSegments(segs, tiers).toDF().withColumn("pday", pdayCol)
 
-  /** Run the full pipeline. `asOfSec` drives retention (None = max input
-    * bucket, deterministic — never wall-clock).
+  /** Per-conversation totals, the analog of PyReshaper's `once` file
+    * (SURVEY.md O3): the coarsest of `cfg.tiers` in `points` (as read from
+    * `<outputRoot>/points`, with its `turns` and `textLenSum`) summed by
+    * `conv_id`. Derived, not stored, so they describe what the points table
+    * holds whatever mix of write modes built it. Does no IO.
+    */
+  def dims(points: DataFrame, cfg: RollupConfig): DataFrame =
+    points.filter(col("tier") === cfg.tiers.maxBy(_.bucketSec).name)
+      .groupBy("conv_id").agg(
+        sum("turns").as("turns_total"),
+        sum("textLenSum").as("text_len_total"),
+        min("bucket").as("first_bucket"),
+        max("bucket").as("last_bucket"))
+
+  /** Run the full pipeline. `asOfSec` drives retention (None = the newest
+    * event second the run reads, deterministic — never wall-clock).
     */
   def run(spark: SparkSession, cfg: RollupConfig,
       io: TableIO = ParquetTableIO, asOfSec: Option[Long] = None): RunReport = {
@@ -121,31 +135,28 @@ object RollupJob {
       case None => turnsRead
     }
 
-    // ---- wmode 'a': prune input below the committed high-water mark.
-    // The predicate compares ts DIRECTLY against a timestamp literal (start
-    // of the UTC day after the high-water pday) so parquet/Iceberg can
-    // prune row groups on ts min/max stats and partition transforms; a
-    // date_format(ts) string comparison would force a full rescan of the
-    // raw table on every append run (PlanAuditSpec asserts the pushdown).
-    val turns = if (cfg.writeMode == "a") {
-      val hw = Checkpoint.highWater(spark, io, cfg.outputRoot)
-      hw.values.minOption match {
-        case Some(minHw) =>
-          turnsAll.filter(appendPredicate(minHw))
-        case None => turnsAll
-      }
-    } else turnsAll
-
     // committed (tier, pday) partitions — anti-joined against planned
     // output (J3). Collected once: a control-plane table of tiers × days
     // rows, so the joins broadcast a local relation and the per-tier
-    // skipped counts need no extra job.
+    // skipped counts and the append high-water mark need no extra job.
     val resume = cfg.writeMode == "s" || cfg.writeMode == "a"
     val committedRows: Seq[(String, String)] =
       if (resume) Checkpoint.committed(spark, io, cfg.outputRoot)
         .as[(String, String)].collect().toSeq
       else Seq.empty
     val committed = committedRows.toDF("tier", "pday")
+
+    // ---- wmode 'a': prune input below the committed high-water mark (the
+    // lowest of each table's newest committed pday). The predicate compares
+    // ts DIRECTLY against a timestamp literal so parquet/Iceberg can prune
+    // row groups on ts min/max stats and partition transforms; a
+    // date_format(ts) string comparison would force a full rescan of the
+    // raw table on every append run (PlanAuditSpec asserts the pushdown).
+    val minHw = committedRows.groupBy(_._1).values.map(_.map(_._2).max).minOption
+    val turns = minHw match {
+      case Some(hw) if cfg.writeMode == "a" => turnsAll.filter(appendPredicate(hw))
+      case _ => turnsAll
+    }
 
     val fingerprint = s"${cfg.inputPath}@${cfg.runId}"
     val sorted = cfg.tiers.sortBy(_.bucketSec)
@@ -163,17 +174,12 @@ object RollupJob {
     val segsTyped = SeriesPivot.segmentsSorted(turns, segTier, cfg)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // rollup: every tier's points in ONE exchange-free fold over the cached
-    // segments, cached once — the points write and dims read it
+    // segments, cached once — its count pass and the points write read it
     val points = foldPoints(segsTyped, sorted).persist()
-    // every write the run starts in the background: the finally below waits
-    // for each, so a throw anywhere leaves no write running into the next
-    // run, and both caches are released on every exit
-    val background = scala.collection.mutable.ListBuffer.empty[Future[Unit]]
-    def inBackground(body: => Unit): Future[Unit] = {
-      val f = Future(body)
-      background += f
-      f
-    }
+    // the run's one background write (segments): the finally below waits for
+    // it, so a throw anywhere leaves no write running into the next run, and
+    // both caches are released on every exit
+    var segsF: Future[Unit] = Future.unit
     try {
       val segs = segsTyped.toDF().withColumn("pday", pdayCol)
       val segsToWrite =
@@ -197,7 +203,7 @@ object RollupJob {
       // the job needs, per pday: segments, turns (sum of n, never a second
       // raw scan) and the max event second (drives retention)
       val committedSet = committedRows.toSet
-      val (segStats, _) = timed("segments pivot (materialize)")(segsTyped
+      val segStats = timed("segments pivot (materialize)")(segsTyped
         .map(s => (s.bucket, s.n.toLong,
           Math.floorDiv(graft.codec.Gorilla.decodeTimestamps(s.tsBlob).max, 1000000L)))
         .toDF("bucket", "n", "t")
@@ -216,7 +222,7 @@ object RollupJob {
       // The segments write + commit runs in the background while this thread
       // folds the points into the cache, overlapping the write's commit +
       // listing tail.
-      val segsF = inBackground {
+      segsF = Future {
         timed("segments write")(
           io.write(forWrite(segsToWrite, segStats.map(s => (segTier.name, s._1) -> s._3)),
             segmentsPath, Seq("tier", "pday"), "overwrite"))
@@ -227,7 +233,7 @@ object RollupJob {
       // the pass that materializes the points cache also counts each
       // (tier, pday): one point per (conv_id, bucket), so that is the
       // partition's lineage count and its write fan-out
-      val (pointCounts, _) = timed("points fold (materialize)")(
+      val pointCounts = timed("points fold (materialize)")(
         points.groupBy("tier", "pday").count()
           .as[(String, String, Long)].collect().toSeq)
       val pointLineage = pointCounts.filterNot { case (t, d, _) => committedSet((t, d)) }
@@ -254,48 +260,27 @@ object RollupJob {
       Checkpoint.commitCounts(spark, io, cfg.outputRoot, cfg.runId,
         pointLineage.toDF("tier", "pday", "rows"), fingerprint)
 
-      // ---- dimension table (O3, the `once`-file analog): conversation-level
-      // attributes written once per run, derived from the cached coarsest
-      // tier's points (no extra scan of raw data); broadcast-join side for
-      // downstream queries. The `once` analog requires one TABLE per run, not
-      // one file: it is written straight from its aggregation's shuffle, so
-      // its file count follows that shuffle's (AQE-sized) partitions and no
-      // single task funnels 10^8–10^9 conversations. It runs in the
-      // background while retention drops expired partitions of the other
-      // tables.
-      val dims = points.filter(col("tier") === segTier.name).groupBy("conv_id").agg(
-        sum("turns").as("turns_total"),
-        sum("textLenSum").as("text_len_total"),
-        min("bucket").as("first_bucket"),
-        max("bucket").as("last_bucket"))
-      val dimsF = inBackground {
-        timed("dims write")(
-          io.write(dims, s"${cfg.outputRoot}/dims", Seq.empty, "overwrite"))
-      }
-
       val reports = sorted.map { t =>
         TierReport(t.name,
           written = pointLineage.collect { case (t.name, _, n) => n }.sum,
           skipped = committedRows.count(_._1 == t.name).toLong)
       }
-      // ---- retention: after every points/segments write has landed (the
-      // dims write may still be in flight — a different table). Segments
-      // follow the COARSEST tier's retention (the safe policy: segments are
-      // the decode source for every re-aggregation).
+      // ---- retention: after every points/segments write has landed.
+      // Segments follow the COARSEST tier's retention (the safe policy:
+      // segments are the decode source for every re-aggregation).
       val asOf = asOfSec.orElse(maxTsSec).getOrElse(0L)
-      val (retained, _) = timed("retention") {
+      val retained = timed("retention") {
         val cuts = Retention(spark, io, pointsPath, cfg.tiers, asOf)
         Retention(spark, io, segmentsPath, Seq(segTier), asOf)
         cuts
       }
-      Await.result(dimsF, Duration.Inf)
       Checkpoint.recordMetrics(spark, io, cfg.outputRoot, cfg.runId, "run",
         Map("input_rows" -> inputRows.toDouble,
           "segments_written" -> segsWritten.toDouble) ++
           reports.map(r => s"points_${r.tier}" -> r.written.toDouble))
       RunReport(cfg.runId, inputRows, reports, segsWritten, retained)
     } finally {
-      background.foreach(Await.ready(_, Duration.Inf))
+      Await.ready(segsF, Duration.Inf)
       segsTyped.unpersist()
       points.unpersist()
     }

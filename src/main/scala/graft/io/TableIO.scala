@@ -72,18 +72,21 @@ sealed class FileTableIO(format: String) extends TableIO {
 
   /** Local partition-drop: list the `col=value` partition directories,
     * evaluate the predicate over a local relation of their values and
-    * delete the matching directories. The relation is planned and filtered
-    * on the driver, so a drop launches no Spark job, never reads the table
-    * (an empty table with no data file is fine) and sets no session conf.
-    * Values compare as strings, like [[read]]'s partition columns. (Iceberg:
-    * `DELETE FROM t WHERE <predicate>` — a metadata-only partition drop.)
+    * delete the matching directories, then each parent partition directory
+    * the deletes leave empty (never the table root). The relation is
+    * planned and filtered on the driver, so a drop launches no Spark job,
+    * never reads the table (an empty table with no data file is fine) and
+    * sets no session conf. Values compare as strings, like [[read]]'s
+    * partition columns. (Iceberg: `DELETE FROM t WHERE <predicate>` — a
+    * metadata-only partition drop.)
     */
   override def dropPartitions(spark: SparkSession, path: String, predicate: String): Unit = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // qualified like the listed paths, so depths compare
+    val root = fs.makeQualified(new Path(path))
     if (!fs.exists(root)) return
     // every partition directory with its (column, value) pairs: a leaf
-    // that holds files (a drop leaves its parent `col=value` dir empty)
+    // that holds files
     def partitions(dir: Path, kv: Vector[(String, String)]): Seq[(Path, Vector[(String, String)])] = {
       val (dirs, files) = fs.listStatus(dir).toSeq.partition(_.isDirectory)
       val sub = dirs.filter(_.getPath.getName.contains("="))
@@ -101,7 +104,15 @@ sealed class FileTableIO(format: String) extends TableIO {
     val rows = parts.map { case (dir, kv) => Row.fromSeq(kv.map(_._2) :+ dir.toString) }
     val doomed = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
       .filter(predicate).select(pathCol).collect()
-    doomed.foreach(r => fs.delete(new Path(r.getString(0)), true))
+    def pruneEmpty(dir: Path): Unit =
+      if (dir.depth > root.depth && fs.listStatus(dir).isEmpty) {
+        fs.delete(dir, false)
+        pruneEmpty(dir.getParent)
+      }
+    doomed.map(r => new Path(r.getString(0))).foreach { dir =>
+      fs.delete(dir, true)
+      pruneEmpty(dir.getParent)
+    }
   }
 }
 

@@ -11,10 +11,12 @@ import org.apache.spark.sql.functions._
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
-/** RollupJob orchestration features: dims table (once-file analog O3),
-  * output limit (X3), metric include-list (P2), multi-config run (O2),
-  * outputs that no caller session setting changes, the write fan-out,
-  * empty input, job-free retention and a failed run's clean-up.
+/** RollupJob orchestration features: per-conversation totals derived from
+  * the points table (`RollupJob.dims`, the once-file analog O3, never
+  * written), output limit (X3), metric include-list (P2), multi-config run
+  * (O2), outputs that no caller session setting changes, the write fan-out,
+  * empty input, job-free retention that leaves no empty partition directory
+  * and a failed run's clean-up.
   */
 class JobFeaturesSpec extends SparkSpec {
   import spark.implicits._
@@ -46,6 +48,7 @@ class JobFeaturesSpec extends SparkSpec {
       .select("tier", "pday", "rows")
   }
   private def segments(out: String) = table(out, "segments").drop("pday").as[Segment]
+  private def dims(out: String) = RollupJob.dims(table(out, "points"), RollupConfig("", out))
 
   /** Data files of a table, by the partition directory that holds them. */
   private def dataFiles(dir: String): Map[String, Int] = {
@@ -144,7 +147,7 @@ class JobFeaturesSpec extends SparkSpec {
         assertSameRows(f(out), f(utcOut), s"$tz vs UTC: $what")
       same("points", points)
       same("decoded segments", o => SeriesPivot.decode(segments(o)).toDF())
-      same("dims", table(_, "dims"))
+      same("dims", dims)
       same("point lineage", lineage(_, segments = false))
       same("seg-1d lineage", lineage(_, segments = true))
     }
@@ -253,7 +256,7 @@ class JobFeaturesSpec extends SparkSpec {
       def same(what: String, f: String => org.apache.spark.sql.DataFrame): Unit =
         assertSameRows(f(out), f(firstOut), s"${r.name} vs ${first.name}: $what")
       same("points", points)
-      same("dims", table(_, "dims"))
+      same("dims", dims)
       same("point lineage", lineage(_, segments = false))
       // at 7 points per segment a conv-day spans more segments, so only
       // the runs at the default size share their segments and seg- lineage
@@ -281,7 +284,7 @@ class JobFeaturesSpec extends SparkSpec {
     assert(salts == Map("1m" -> Seq(0L, 1L, 2L, 3L), "1h" -> Seq(0L), "1d" -> Seq(0L)))
   }
 
-  test("write fan-out: one file per small (tier, pday) partition and one dims file") {
+  test("write fan-out: one file per small (tier, pday) partition and no dims table") {
     val out = s"$tmp/fanout"
     RollupJob.run(spark, RollupConfig(inputPath, out, runId = "fan"))
     val points = dataFiles(s"$out/points")
@@ -289,7 +292,7 @@ class JobFeaturesSpec extends SparkSpec {
     Seq("points" -> points, "segments" -> dataFiles(s"$out/segments")).foreach { case (t, files) =>
       assert(files.nonEmpty && files.values.forall(_ == 1), s"$t files per partition: $files")
     }
-    assert(dataFiles(s"$out/dims") == Map("" -> 1))
+    assert(!new java.io.File(s"$out/dims").exists())
   }
 
   test("empty input: an o run then an a run succeed and write empty tables") {
@@ -303,7 +306,7 @@ class JobFeaturesSpec extends SparkSpec {
         Seq(("1m", 0L, 0L), ("1h", 0L, 0L), ("1d", 0L, 0L)), s"$mode: $r")
     }
     assert(dataFiles(s"$out/points").isEmpty && dataFiles(s"$out/segments").isEmpty)
-    assert(table(out, "dims").count() == 0)
+    assert(!new java.io.File(s"$out/dims").exists())
     assert(table(out, "_lineage").count() == 0)
     val inputRows = table(out, "_metrics").filter(col("metric") === "input_rows")
       .select("run_id", "value").as[(String, Double)].collect().toMap
@@ -324,14 +327,20 @@ class JobFeaturesSpec extends SparkSpec {
       val jobs = jobsDuring(Retention(spark, io, s"$out/points", Tier.cascade, asOf))
       assert(jobs == 0, s"$name: retention ran $jobs Spark jobs")
       assert(tiers == Set("tier=1d"), name)
+      // the drop removes the tier directories it empties, too
+      def emptyDirs(f: java.io.File): Seq[String] = {
+        val kids = f.listFiles().toSeq
+        (if (kids.isEmpty) Seq(f.getName) else Nil) ++ kids.filter(_.isDirectory).flatMap(emptyDirs)
+      }
+      assert(emptyDirs(new java.io.File(s"$out/points")).isEmpty, name)
     }
   }
 
   test("a failed run leaves no write running and no cache behind; the next run succeeds") {
     val sc = spark.sparkContext
     val cases = Seq(
-      // retention fails while the dims write is still in flight
-      "retention" -> new FailingIO(failDrop = "points", slowWrite = "dims"),
+      // retention fails after the held segments write has landed
+      "retention" -> new FailingIO(failDrop = "points", slowWrite = "segments"),
       // the segments write fails while this thread folds the points
       "segments write" -> new FailingIO(failWrite = "segments", slowWrite = "segments"))
     cases.foreach { case (what, io) =>
@@ -344,7 +353,7 @@ class JobFeaturesSpec extends SparkSpec {
       assert(sc.getPersistentRDDs.keySet == cached, s"$what: run() left its caches persisted")
       val r = RollupJob.run(spark, RollupConfig(inputPath, out, runId = "after"))
       assert(r.inputRows == Synth.tiny(spark).count(), what)
-      assert(table(out, "dims").count() ==
+      assert(dims(out).count() ==
         spark.read.parquet(inputPath).select("conv_id").distinct().count(), what)
     }
   }
@@ -377,12 +386,11 @@ class JobFeaturesSpec extends SparkSpec {
   test("dims table: one row per conversation with exact totals") {
     val out = s"$tmp/dims"
     RollupJob.run(spark, RollupConfig(inputPath, out, runId = "r"))
-    val dims = ParquetTableIO.read(spark, s"$out/dims")
     val want = spark.read.parquet(inputPath)
       .groupBy("conv_id")
       .agg(count(lit(1)).as("turns_total"),
         sum(length(col("text"))).as("text_len_total"))
-    assertSameRows(dims.select("conv_id", "turns_total", "text_len_total"),
+    assertSameRows(dims(out).select("conv_id", "turns_total", "text_len_total"),
       want, "dims totals")
   }
 

@@ -23,6 +23,31 @@ class ResumeSpec extends SparkSpec {
   private def cfg(out: String, mode: String, runId: String) = RollupConfig(
     inputPath = inputPath, outputRoot = out, writeMode = mode, runId = runId)
 
+  // a fresh o run over the whole input, the reference of the resume tests
+  private lazy val freshOut = {
+    val out = s"$tmp/fresh"
+    RollupJob.run(spark, cfg(out, "o", "run-fresh"))
+    out
+  }
+  private lazy val days = spark.read.parquet(inputPath)
+    .select(date_format(col("ts"), "yyyy-MM-dd").as("d")).distinct()
+    .as[String].collect().sorted
+  // the input's first UTC day: what a failed run had processed
+  private lazy val firstDayInput = {
+    val p = s"$tmp/input-partial"
+    spark.read.parquet(inputPath)
+      .filter(date_format(col("ts"), "yyyy-MM-dd") === days.head)
+      .write.parquet(p)
+    p
+  }
+  // an o run over the first day, then an a run over the whole input
+  private lazy val appendOut = {
+    val out = s"$tmp/append"
+    RollupJob.run(spark, cfg(out, "o", "run-1").copy(inputPath = firstDayInput))
+    RollupJob.run(spark, cfg(out, "a", "run-2"))
+    out
+  }
+
   private def comparablePoints(root: String): DataFrame =
     ParquetTableIO.read(spark, s"$root/points")
       .withColumn("byRole", array_sort(map_entries(col("byRole"))))
@@ -84,26 +109,15 @@ class ResumeSpec extends SparkSpec {
   }
 
   test("wmode 's' resume: partial then full equals a fresh full run, no recompute") {
-    val outFresh = s"$tmp/fresh"
-    RollupJob.run(spark, cfg(outFresh, "o", "run-fresh"))
-
     // simulate a failed run: only the first UTC day of input was processed
-    val days = spark.read.parquet(inputPath)
-      .select(date_format(col("ts"), "yyyy-MM-dd").as("d")).distinct()
-      .as[String].collect().sorted
     assert(days.length >= 2, s"fixture spans ${days.length} day(s); need >= 2")
-    val partialInput = s"$tmp/input-partial"
-    spark.read.parquet(inputPath)
-      .filter(date_format(col("ts"), "yyyy-MM-dd") === days.head)
-      .write.parquet(partialInput)
-
     val outResume = s"$tmp/resume"
     RollupJob.run(spark, cfg(outResume, "o", "run-1")
-      .copy(inputPath = partialInput))
+      .copy(inputPath = firstDayInput))
     // resume with the FULL input in skip mode
     val r2 = RollupJob.run(spark, cfg(outResume, "s", "run-2"))
 
-    assertSameRows(comparablePoints(outResume), comparablePoints(outFresh),
+    assertSameRows(comparablePoints(outResume), comparablePoints(freshOut),
       "resumed == fresh")
     // no recompute: run-2's lineage must not include day-1 partitions
     val lineage = ParquetTableIO.read(spark, s"$outResume/_lineage")
@@ -115,22 +129,18 @@ class ResumeSpec extends SparkSpec {
   }
 
   test("wmode 'a' append: newer days only, final table equals fresh run") {
-    val outFresh = s"$tmp/fresh2"
-    RollupJob.run(spark, cfg(outFresh, "o", "run-fresh2"))
-
-    val days = spark.read.parquet(inputPath)
-      .select(date_format(col("ts"), "yyyy-MM-dd").as("d")).distinct()
-      .as[String].collect().sorted
-    val partialInput = s"$tmp/input-partial2"
-    spark.read.parquet(inputPath)
-      .filter(date_format(col("ts"), "yyyy-MM-dd") === days.head)
-      .write.parquet(partialInput)
-
-    val out = s"$tmp/append"
-    RollupJob.run(spark, cfg(out, "o", "run-1").copy(inputPath = partialInput))
-    RollupJob.run(spark, cfg(out, "a", "run-2"))
-    assertSameRows(comparablePoints(out), comparablePoints(outFresh),
+    assertSameRows(comparablePoints(appendOut), comparablePoints(freshOut),
       "append == fresh")
+  }
+
+  test("wmode 'a' append: per-conversation totals equal a fresh run's") {
+    // derived from the points table, the totals cover the days both runs
+    // wrote, not only the appended ones
+    def dims(root: String) =
+      RollupJob.dims(ParquetTableIO.read(spark, s"$root/points"), cfg(root, "o", "dims"))
+    val want = dims(freshOut)
+    assert(want.count() == Synth.small(spark).select("conv_id").distinct().count())
+    assertSameRows(dims(appendOut), want, "append dims == fresh dims")
   }
 
   test("retention drops expired fine tiers, keeps coarse") {
