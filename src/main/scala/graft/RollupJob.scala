@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * and 1d points of each conv-day folded together from its segments in one
   * exchange-free pass → one points write partitioned by (tier, pday) → one
   * lineage commit per table → retention pass → metrics. Resumable per write
-  * mode (Checkpoint).
+  * mode (Checkpoint): `s` and `a` read only the UTC days they still owe.
   * Per-conversation totals (O3) are not stored: [[dims]] derives them.
   */
 object RollupJob {
@@ -68,15 +68,20 @@ object RollupJob {
       .otherwise(1))
   }
 
-  /** wmode-'a' input predicate: `ts >= start of the UTC day after minHw`,
-    * the first second whose [[Rollups.utcDay]] is past the high-water pday.
-    * A plain `>=` on the ts column against a timestamp literal so the scan
-    * can prune on min/max stats and partition transforms (pushdown asserted
-    * by PlanAuditSpec).
+  /** The resume input predicate: `ts` outside the skipped UTC `days`, with
+    * consecutive days merged into one closed range; `openBelow` drops the
+    * first range's lower bound (wmode 'a'). Plain ts-vs-literal compares, so
+    * the scan prunes on min/max stats (PlanAuditSpec asserts the pushdown).
     */
-  private[graft] def appendPredicate(minHw: String): org.apache.spark.sql.Column = {
-    val nextDaySec = (java.time.LocalDate.parse(minHw).toEpochDay + 1) * 86400L
-    col("ts") >= lit(java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(nextDaySec)))
+  private[graft] def skipPredicate(days: Seq[String], openBelow: Boolean = false): Column = {
+    def start(epochDay: Long) =
+      lit(java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(epochDay * 86400L)))
+    val ds = days.map(java.time.LocalDate.parse(_).toEpochDay).toSet
+    val ranges = ds.filterNot(d => ds(d - 1)).toSeq.sorted.zip(ds.filterNot(d => ds(d + 1)).toSeq.sorted)
+    ranges.zipWithIndex.map { case ((lo, hi), i) =>
+      val after = col("ts") >= start(hi + 1)
+      if (openBelow && i == 0) after else col("ts") < start(lo) || after
+    }.foldLeft(lit(true))(_ && _)
   }
 
   /** The job's points: every tier folded from the pivot's segments in one
@@ -100,7 +105,10 @@ object RollupJob {
         max("bucket").as("last_bucket"))
 
   /** Run the full pipeline. `asOfSec` drives retention (None = the newest
-    * event second the run reads, deterministic — never wall-clock).
+    * event second the run reads, deterministic — never wall-clock; a run
+    * that reads no turns then drops nothing and reports no cutoffs). Write
+    * modes `s` and `a` read only the UTC days they still owe
+    * ([[skipPredicate]]); past the scan, every mode runs the same code.
     */
   def run(spark: SparkSession, cfg: RollupConfig,
       io: TableIO = ParquetTableIO, asOfSec: Option[Long] = None): RunReport = {
@@ -108,17 +116,19 @@ object RollupJob {
     val pointsPath = s"${cfg.outputRoot}/points"
     val segmentsPath = s"${cfg.outputRoot}/segments"
 
-    // ---- wmode 'w': error-if-exists (reshaper _inspect_output_files) ----
-    if (cfg.writeMode == "w" && io.exists(spark, pointsPath))
-      sys.error(s"output $pointsPath exists and write mode is 'w'")
-
-    // include-list validation up-front (P2: error on unknown metric names,
-    // like Specifier.time_series erroring on absent variables)
+    // validation before any read or write: unknown write modes and metric
+    // names fail (P2, like Specifier.time_series on absent variables)
+    require(Seq("w", "s", "o", "a").contains(cfg.writeMode),
+      s"unknown write mode '${cfg.writeMode}'; valid: w,s,o,a")
     cfg.metricsInclude.foreach { ms =>
       val unknown = ms.filterNot(RollupConfig.AllMetrics.contains)
       require(unknown.isEmpty,
         s"unknown metrics ${unknown.mkString(",")}; valid: ${RollupConfig.AllMetrics.mkString(",")}")
     }
+
+    // ---- wmode 'w': error-if-exists (reshaper _inspect_output_files) ----
+    if (cfg.writeMode == "w" && io.exists(spark, pointsPath))
+      sys.error(s"output $pointsPath exists and write mode is 'w'")
 
     // S2 input inspection: fail fast on schema drift before any shuffle
     val inputDf = io.read(spark, cfg.inputPath)
@@ -135,31 +145,31 @@ object RollupJob {
       case None => turnsRead
     }
 
-    // committed (tier, pday) partitions — anti-joined against planned
-    // output (J3). Collected once: a control-plane table of tiers × days
-    // rows, so the joins broadcast a local relation and the per-tier
-    // skipped counts and the append high-water mark need no extra job.
-    val resume = cfg.writeMode == "s" || cfg.writeMode == "a"
-    val committedRows: Seq[(String, String)] =
-      if (resume) Checkpoint.committed(spark, io, cfg.outputRoot)
+    // ---- resume (S3/P3): the committed days of each table the run writes
+    // (segments, each tier's points) decide which UTC days the scan skips,
+    // as the reference drops a written series from its work list.
+    val sorted = cfg.tiers.sortBy(_.bucketSec)
+    val segTier = sorted.last
+    val segName = s"seg-${segTier.name}"
+    val committedRows: Seq[(String, String)] = cfg.writeMode match {
+      case "s" | "a" => Checkpoint.committed(spark, io, cfg.outputRoot)
         .as[(String, String)].collect().toSeq
-      else Seq.empty
-    val committed = committedRows.toDF("tier", "pday")
-
-    // ---- wmode 'a': prune input below the committed high-water mark (the
-    // lowest of each table's newest committed pday). The predicate compares
-    // ts DIRECTLY against a timestamp literal so parquet/Iceberg can prune
-    // row groups on ts min/max stats and partition transforms; a
-    // date_format(ts) string comparison would force a full rescan of the
-    // raw table on every append run (PlanAuditSpec asserts the pushdown).
-    val minHw = committedRows.groupBy(_._1).values.map(_.map(_._2).max).minOption
-    val turns = minHw match {
-      case Some(hw) if cfg.writeMode == "a" => turnsAll.filter(appendPredicate(hw))
-      case _ => turnsAll
+      case _ => Seq.empty
     }
+    val committedDays = (segName +: sorted.map(_.name))
+      .map(t => committedRows.collect { case (`t`, d) => d }.toSet)
+    // 'a' skips each day through the lowest of the tables' newest committed
+    // days (none if a table has none), 's' each day every table committed;
+    // any other day is read and rewritten whole
+    val skip = cfg.writeMode match {
+      case "a" if committedDays.forall(_.nonEmpty) =>
+        skipPredicate(Seq(committedDays.map(_.max).min), openBelow = true)
+      case "s" => skipPredicate(committedDays.reduce(_ intersect _).toSeq)
+      case _ => lit(true)
+    }
+    val turns = turnsAll.filter(skip)
 
     val fingerprint = s"${cfg.inputPath}@${cfg.runId}"
-    val sorted = cfg.tiers.sortBy(_.bucketSec)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
@@ -167,8 +177,6 @@ object RollupJob {
     // ---- segments (the pivot) at the coarsest tier: long segments amortize
     // per-segment encode cost; memory stays bounded via maxPointsPerSegment,
     // which also splits a hot conversation's bucket into several segments.
-    val segTier = sorted.last
-    val segName = s"seg-${segTier.name}"
     // the segments are the job's ONLY full read of the raw table: the points
     // fold below decodes them (≈2% of raw bytes) instead of rescanning raw
     val segsTyped = SeriesPivot.segmentsSorted(turns, segTier, cfg)
@@ -182,11 +190,6 @@ object RollupJob {
     var segsF: Future[Unit] = Future.unit
     try {
       val segs = segsTyped.toDF().withColumn("pday", pdayCol)
-      val segsToWrite =
-        if (resume) segs.join(
-          broadcast(committed.filter(col("tier") === segName).select("pday")),
-          Seq("pday"), "left_anti")
-        else segs
       // write fan-out: each (tier, pday) partition's rows go to
       // saltBuckets(rows) tasks, chosen from the exact counts the two
       // materializing passes below collect. A small day is one task and one
@@ -202,7 +205,6 @@ object RollupJob {
       // the pass that materializes the segments cache also takes every count
       // the job needs, per pday: segments, turns (sum of n, never a second
       // raw scan) and the max event second (drives retention)
-      val committedSet = committedRows.toSet
       val segStats = timed("segments pivot (materialize)")(segsTyped
         .map(s => (s.bucket, s.n.toLong,
           Math.floorDiv(graft.codec.Gorilla.decodeTimestamps(s.tsBlob).max, 1000000L)))
@@ -210,12 +212,9 @@ object RollupJob {
         .groupBy(pdayCol.as("pday"))
         .agg(count(lit(1)), sum("n"), max("t"))
         .as[(String, Long, Long, Long)].collect().toSeq)
-      val segLineage = segStats.collect {
-        case (pday, nSegs, _, _) if !committedSet((segName, pday)) => (segName, pday, nSegs)
-      }
       val inputRows = segStats.map(_._3).sum
       val maxTsSec = segStats.map(_._4).maxOption
-      val segsWritten = segLineage.map(_._3).sum
+      val segsWritten = segStats.map(_._2).sum
 
       // ---- overlap discipline: data partitions land before their lineage
       // append, and a failed write skips every later one (the Await below).
@@ -224,10 +223,10 @@ object RollupJob {
       // listing tail.
       segsF = Future {
         timed("segments write")(
-          io.write(forWrite(segsToWrite, segStats.map(s => (segTier.name, s._1) -> s._3)),
+          io.write(forWrite(segs, segStats.map(s => (segTier.name, s._1) -> s._3)),
             segmentsPath, Seq("tier", "pday"), "overwrite"))
         Checkpoint.commitCounts(spark, io, cfg.outputRoot, cfg.runId,
-          segLineage.toDF("tier", "pday", "rows"), fingerprint)
+          segStats.map(s => (segName, s._1, s._2)).toDF("tier", "pday", "rows"), fingerprint)
       }
 
       // the pass that materializes the points cache also counts each
@@ -236,10 +235,6 @@ object RollupJob {
       val pointCounts = timed("points fold (materialize)")(
         points.groupBy("tier", "pday").count()
           .as[(String, String, Long)].collect().toSeq)
-      val pointLineage = pointCounts.filterNot { case (t, d, _) => committedSet((t, d)) }
-      val toWrite =
-        if (resume) points.join(broadcast(committed), Seq("tier", "pday"), "left_anti")
-        else points
       val written = cfg.metricsInclude match {
         case Some(ms) =>
           val drop = Seq(
@@ -247,8 +242,8 @@ object RollupJob {
             "byTool" -> Seq("byTool"),
             "textLen" -> Seq("textLenSum", "textLenMin", "textLenMax"))
             .filterNot { case (m, _) => ms.contains(m) }.flatMap(_._2)
-          toWrite.drop(drop: _*)
-        case None => toWrite
+          points.drop(drop: _*)
+        case None => points
       }
       // all tiers in one write partitioned by (tier, pday) and one lineage
       // commit, after the segments write has landed; a failed segments write
@@ -258,21 +253,23 @@ object RollupJob {
         io.write(forWrite(written, pointCounts.map { case (t, d, n) => (t, d) -> n }),
           pointsPath, Seq("tier", "pday"), "overwrite"))
       Checkpoint.commitCounts(spark, io, cfg.outputRoot, cfg.runId,
-        pointLineage.toDF("tier", "pday", "rows"), fingerprint)
+        pointCounts.toDF("tier", "pday", "rows"), fingerprint)
 
       val reports = sorted.map { t =>
         TierReport(t.name,
-          written = pointLineage.collect { case (t.name, _, n) => n }.sum,
+          written = pointCounts.collect { case (t.name, _, n) => n }.sum,
           skipped = committedRows.count(_._1 == t.name).toLong)
       }
       // ---- retention: after every points/segments write has landed.
       // Segments follow the COARSEST tier's retention (the safe policy:
-      // segments are the decode source for every re-aggregation).
-      val asOf = asOfSec.orElse(maxTsSec).getOrElse(0L)
-      val retained = timed("retention") {
-        val cuts = Retention(spark, io, pointsPath, cfg.tiers, asOf)
-        Retention(spark, io, segmentsPath, Seq(segTier), asOf)
-        cuts
+      // segments are the decode source for every re-aggregation). A run
+      // that reads no turns and gets no asOf has no clock: it drops nothing.
+      val retained = asOfSec.orElse(maxTsSec).fold(Map.empty[String, String]) { asOf =>
+        timed("retention") {
+          val cuts = Retention(spark, io, pointsPath, cfg.tiers, asOf)
+          Retention(spark, io, segmentsPath, Seq(segTier), asOf)
+          cuts
+        }
       }
       Checkpoint.recordMetrics(spark, io, cfg.outputRoot, cfg.runId, "run",
         Map("input_rows" -> inputRows.toDouble,
@@ -307,10 +304,10 @@ object RollupJob {
   */
 object RollupMain {
   def main(args: Array[String]): Unit = {
-    val input = args(0)
-    val output = args(1)
-    val mode = if (args.length > 2) args(2) else "o"
-    val runId = if (args.length > 3) args(3) else "run-0"
+    if (args.length < 2) {
+      System.err.println("usage: RollupMain <inputPath> <outputRoot> [writeMode=o] [runId=run-0]")
+      sys.exit(2)
+    }
     // under spark-submit the master comes from --master (spark.master prop);
     // standalone runs fall back to local mode
     val builder =
@@ -319,9 +316,8 @@ object RollupMain {
       else LocalSession.builder(LocalSession.envCpus(8))
     val spark = builder.appName("graft-rollup").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val report = RollupJob.run(spark,
-      RollupConfig(inputPath = input, outputRoot = output,
-        writeMode = mode, runId = runId))
+    val report = RollupJob.run(spark, RollupConfig(inputPath = args(0), outputRoot = args(1),
+      writeMode = args.lift(2).getOrElse("o"), runId = args.lift(3).getOrElse("run-0")))
     println(report)
     spark.stop()
   }

@@ -18,10 +18,11 @@ import org.apache.spark.sql.functions._
   *
   * Write modes (CLI parity with `s2srun -m {w,s,o,a}`):
   *   w  error if the output table already exists
-  *   s  skip partitions already committed in lineage (anti-join), write rest
+  *   s  read only the UTC days not every table has committed (the job
+  *      prunes its input scan; RollupJob.skipPredicate)
   *   o  overwrite the partitions produced by this run
-  *   a  append-only: process only input newer than the committed high-water
-  *      mark per tier
+  *   a  append-only: read only the days after the high-water pday, the
+  *      lowest of each table's newest committed pday
   */
 object Checkpoint {
   val LineageDir = "_lineage"
@@ -32,7 +33,7 @@ object Checkpoint {
     if (io.exists(spark, path)) Some(io.read(spark, path)) else None
   }
 
-  /** Partitions (tier, pday) already committed — for wmode 's' anti-joins. */
+  /** Partitions (tier, pday) already committed — the days wmodes 's' and 'a' skip. */
   def committed(spark: SparkSession, io: TableIO, root: String): DataFrame =
     lineage(spark, io, root) match {
       case Some(df) => df.select("tier", "pday").distinct()

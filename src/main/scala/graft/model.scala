@@ -76,8 +76,8 @@ object Tier {
   *
   * writeMode mirrors `s2srun -m {w,s,o,a}`
   * (`reshaper.py :: Slice2SeriesReshaper._inspect_output_files`):
-  *   w = error if output exists; s = skip already-committed partitions;
-  *   o = overwrite; a = append buckets newer than the high-water mark.
+  *   w = error if output exists; s = skip the UTC days every table has
+  *   committed; o = overwrite; a = append days past the high-water mark.
   */
 case class RollupConfig(
     inputPath: String,

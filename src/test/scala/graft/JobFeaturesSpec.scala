@@ -304,6 +304,8 @@ class JobFeaturesSpec extends SparkSpec {
       assert(r.inputRows == 0 && r.segmentsWritten == 0, s"$mode: $r")
       assert(r.tiers.map(t => (t.tier, t.written, t.skipped)) ==
         Seq(("1m", 0L, 0L), ("1h", 0L, 0L), ("1d", 0L, 0L)), s"$mode: $r")
+      // no turns and no asOfSec: no clock, so no retention cutoffs
+      assert(r.retention.isEmpty, s"$mode: $r")
     }
     assert(dataFiles(s"$out/points").isEmpty && dataFiles(s"$out/segments").isEmpty)
     assert(!new java.io.File(s"$out/dims").exists())
@@ -356,6 +358,54 @@ class JobFeaturesSpec extends SparkSpec {
       assert(dims(out).count() ==
         spark.read.parquet(inputPath).select("conv_id").distinct().count(), what)
     }
+  }
+
+  test("a crash between the segments and points commits: an 'a' or 's' resume equals a fresh run") {
+    // the points write fails after the segments have committed, so the
+    // lineage holds seg-1d rows for both UTC days and no point rows
+    val crashed = s"$tmp/crash"
+    val e = intercept[RuntimeException](RollupJob.run(spark,
+      RollupConfig(midnightInput, crashed, runId = "crash"),
+      io = new FailingIO(failWrite = "points", slowWrite = "segments")))
+    assert(e.getMessage.contains("injected failure"), e.getMessage)
+    assert(lineage(crashed, segments = true).count() == 2 &&
+      lineage(crashed, segments = false).count() == 0)
+    val fresh = s"$tmp/crash-fresh"
+    RollupJob.run(spark, RollupConfig(midnightInput, fresh, runId = "fresh"))
+    Seq("a", "s").foreach { mode =>
+      val out = s"$tmp/crash-$mode"
+      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(crashed), new java.io.File(out))
+      val r = RollupJob.run(spark,
+        RollupConfig(midnightInput, out, writeMode = mode, runId = s"resume-$mode"))
+      assert(r.inputRows == Synth.tiny(spark).count(), s"$mode: $r")
+      assertSameRows(points(out), points(fresh), s"$mode resume: points")
+      assertSameRows(SeriesPivot.decode(segments(out)).toDF(),
+        SeriesPivot.decode(segments(fresh)).toDF(), s"$mode resume: decoded segments")
+    }
+  }
+
+  test("skipPredicate keeps the ts outside the skipped days, one range per run of days") {
+    val day = 86400L
+    val df = (0 to 6).map(d => new java.sql.Timestamp((Synth.Epoch + d * day + 3600) * 1000))
+      .toDF("ts")
+    def day0(d: Int) = Rollups.utcDay(Synth.Epoch + d * day).toString
+    def kept(p: org.apache.spark.sql.Column) = df.filter(p)
+      .select(((unix_timestamp(col("ts")) - Synth.Epoch) / day).cast("int")).as[Int]
+      .collect().toSeq.sorted
+    val skip = RollupJob.skipPredicate(Seq(2, 1, 4, 3, 6).map(day0))
+    assert(kept(skip) == Seq(0, 5))
+    // days 1-4 merge into one range, day 6 is the other
+    assert("<(?!=)".r.findAllIn(skip.toString).size == 2, skip.toString)
+    assert(kept(RollupJob.skipPredicate(Seq(day0(2)), openBelow = true)) == Seq(3, 4, 5, 6))
+    assert(kept(RollupJob.skipPredicate(Nil)) == (0 to 6))
+  }
+
+  test("an unknown write mode fails before any read or write") {
+    val out = s"$tmp/unknown-mode"
+    val e = intercept[IllegalArgumentException](
+      RollupJob.run(spark, RollupConfig(inputPath, out, writeMode = "x", runId = "x")))
+    assert(e.getMessage.contains("valid: w,s,o,a"), e.getMessage)
+    assert(!new java.io.File(out).exists())
   }
 
   test("connector seam: the whole job runs on ORC and matches parquet output") {

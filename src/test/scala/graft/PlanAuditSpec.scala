@@ -45,11 +45,23 @@ class PlanAuditSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("graft-append").toString
     gen.Synth.tiny(spark).write.parquet(s"$tmp/in")
     val in = spark.read.parquet(s"$tmp/in")
-    val pruned = in.filter(RollupJob.appendPredicate("2024-01-01"))
+    val pruned = in.filter(RollupJob.skipPredicate(Seq("2024-01-01"), openBelow = true))
     val p = plan(pruned)
     assert(p.contains("PushedFilters") &&
       p.replaceAll("\\s+", " ").contains("GreaterThanOrEqual(ts"),
       s"ts high-water filter not pushed to scan:\n$p")
+  }
+
+  test("wmode-'s' skipped-day predicate pushes both ts bounds down to the scan") {
+    // a skipped day in the middle of the input is two plain ts compares
+    // (before its start OR from the next day's start), both prunable
+    val tmp = java.nio.file.Files.createTempDirectory("graft-skip").toString
+    gen.Synth.tiny(spark).write.parquet(s"$tmp/in")
+    val in = spark.read.parquet(s"$tmp/in")
+    val p = plan(in.filter(RollupJob.skipPredicate(Seq("2024-01-01"))))
+    val pushed = p.linesIterator.filter(_.contains("PushedFilters")).mkString(" ")
+    assert(pushed.contains("LessThan(ts") && pushed.contains("GreaterThanOrEqual(ts"),
+      s"skipped-day bounds not pushed to scan:\n$p")
   }
 
   test("dimension join broadcasts the customer side") {

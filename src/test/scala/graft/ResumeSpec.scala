@@ -125,6 +125,10 @@ class ResumeSpec extends SparkSpec {
       .select("pday").distinct().as[String].collect()
     assert(!run2Days.contains(days.head),
       s"run-2 recomputed committed day ${days.head}")
+    // ... and its scan read only the turns outside the committed day
+    val owed = spark.read.parquet(inputPath)
+      .filter(date_format(col("ts"), "yyyy-MM-dd") =!= days.head).count()
+    assert(r2.inputRows == owed, s"run-2 read ${r2.inputRows} turns, owes $owed")
     assert(r2.tiers.forall(_.skipped > 0), "expected skipped partitions")
   }
 
