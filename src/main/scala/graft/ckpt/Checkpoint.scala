@@ -42,7 +42,7 @@ object Checkpoint {
         Seq.empty[(String, String)].toDF("tier", "pday")
     }
 
-  /** Committed high-water mark (max pday) per tier — for wmode 'a'. */
+  /** Committed high-water mark (max pday) per tier; wmode 'a' reads [[committed]]. */
   def highWater(spark: SparkSession, io: TableIO, root: String): Map[String, String] =
     lineage(spark, io, root) match {
       case Some(df) => df.groupBy("tier").agg(max("pday").as("hw"))

@@ -130,6 +130,12 @@ class ResumeSpec extends SparkSpec {
       .filter(date_format(col("ts"), "yyyy-MM-dd") =!= days.head).count()
     assert(r2.inputRows == owed, s"run-2 read ${r2.inputRows} turns, owes $owed")
     assert(r2.tiers.forall(_.skipped > 0), "expected skipped partitions")
+    // a second 's' run owes nothing: it reads no turn, has no clock for
+    // retention and leaves the points as they were
+    val r3 = RollupJob.run(spark, cfg(outResume, "s", "run-3"))
+    assert(r3.inputRows == 0 && r3.retention.isEmpty, s"run-3: $r3")
+    assertSameRows(comparablePoints(outResume), comparablePoints(freshOut),
+      "no-op resume == fresh")
   }
 
   test("wmode 'a' append: newer days only, final table equals fresh run") {
